@@ -79,8 +79,54 @@ def test_pip_non_broadcast_path(spark, sf_dir, polys):
         (r.point_id, r.poly_id)
         for r in points_in_polygons(pts, synth.polygons_as_parts(polys), IDX, broadcast=True).collect()
     )
-    b = sorted(
-        (r.point_id, r.poly_id)
-        for r in points_in_polygons(pts, synth.polygons_as_parts(polys), IDX, broadcast=False).collect()
-    )
+    shuffled = points_in_polygons(pts, synth.polygons_as_parts(polys), IDX, broadcast=False)
+    b = sorted((r.point_id, r.poly_id) for r in shuffled.collect())
     assert a == b
+    # the cover has exact size stats, so only the hint keeps this a shuffle join
+    assert "BroadcastHashJoin" not in _executed_plan(shuffled)
+
+
+def _executed_plan(df) -> str:
+    """Executed (final adaptive) plan of a DataFrame that has been run."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pip_cover_is_local_relation(spark, sf_dir, polys):
+    # the polygon side is an Arrow-built local relation, not pickled rows
+    # (Scan ExistingRDD runs an unpickling job before every query)
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    x, y = synth.point_exprs(F.col("c_custkey"))
+    pts = cust.select(F.col("c_custkey").alias("point_id"), x.alias("x"), y.alias("y"))
+    hits = points_in_polygons(pts, synth.polygons_as_parts(polys), IDX)
+    hits.collect()
+    plan = _executed_plan(hits)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_pip_expr_matches_pandas(spark, sf_dir, polys):
+    # customer points plus the midpoint of every shell and hole edge
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    x, y = synth.point_exprs(F.col("c_custkey"))
+    pts = cust.select(F.col("c_custkey").alias("point_id"), x.alias("x"), y.alias("y"))
+    rows = []
+    for p in polys:
+        for k, part in enumerate(p.parts):
+            xs, ys = np.asarray(part.xs), np.asarray(part.ys)
+            rows += [
+                (-(p.poly_id * 100_000 + k * 1000 + i + 1),
+                 float((xs[i] + xs[i + 1]) / 2), float((ys[i] + ys[i + 1]) / 2))
+                for i in range(len(xs) - 1)
+            ]
+    assert any(pt.is_hole for p in polys for pt in p.parts)
+    edge_pts = spark.createDataFrame(rows, "point_id long, x double, y double")
+    pts = pts.unionByName(edge_pts)
+    parts = synth.polygons_as_parts(polys)
+    expr = sorted(tuple(r) for r in points_in_polygons(pts, parts, IDX).collect())
+    pandas = sorted(
+        tuple(r) for r in points_in_polygons(pts, parts, IDX, method="pandas").collect()
+    )
+    assert expr == pandas
+    # the edge midpoints reach the refine and are not all decided one way
+    n_edge_hits = sum(pid < 0 for pid, _ in expr)
+    assert 0 < n_edge_hits < len(rows)

@@ -41,6 +41,8 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -74,13 +76,12 @@ def _prep_points(points, index, point_id, px, py, z):
 
 def _annulus_offsets(spark, lo: int, hi: int) -> DataFrame:
     """Offsets with lo < max(|dx|, |dy|) <= hi (lo = -1 includes (0,0))."""
-    rows = [
-        (dx, dy)
-        for dx in range(-hi, hi + 1)
-        for dy in range(-hi, hi + 1)
-        if lo < max(abs(dx), abs(dy)) <= hi
-    ]
-    return spark.createDataFrame(rows, "dx int, dy int")
+    d = np.arange(-hi, hi + 1, dtype=np.int32)
+    dx, dy = (a.ravel() for a in np.meshgrid(d, d, indexing="ij"))
+    ring = np.maximum(np.abs(dx), np.abs(dy))
+    keep = (ring > lo) & (ring <= hi)
+    # a local relation (Arrow), so the broadcast needs no unpickling job
+    return spark.createDataFrame(pa.table({"dx": dx[keep], "dy": dy[keep]}))
 
 
 def _candidates(targets: DataFrame, points: DataFrame, index: CellIndex, offsets: DataFrame) -> DataFrame:

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from whitebox_tools_spark import geometry as G
 from whitebox_tools_spark.grid import CellIndex
+from whitebox_tools_spark.operators.pip import polygon_cover
 
 
 # ---------------------------------------------------------------------------
@@ -97,18 +98,6 @@ def segment_cover_cells_expr(index: CellIndex, x0, y0, x1, y1):
     return F.flatten(F.transform(F.sequence(ix0, ix1), rows_of))
 
 
-def _poly_cover_rows(polys_parts, index: CellIndex):
-    """(cell_id, poly_id, xmin, ymin, xmax, ymax) for the broadcast side."""
-    rows = []
-    for poly_id, parts in polys_parts:
-        xs = np.concatenate([np.asarray(p[0]) for p in parts])
-        ys = np.concatenate([np.asarray(p[1]) for p in parts])
-        bb = (float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max()))
-        for cid in index.cover_bbox(*bb):
-            rows.append((cid, poly_id, *bb))
-    return rows
-
-
 def _candidates_per_feature(
     feats: DataFrame, polys_parts, index: CellIndex, *, feat_id: str
 ) -> DataFrame:
@@ -116,9 +105,8 @@ def _candidates_per_feature(
     features with no overlapping candidate get an empty array (left join)."""
     spark = feats.sparkSession
     cover = F.broadcast(
-        spark.createDataFrame(
-            _poly_cover_rows(polys_parts, index),
-            "cell_id long, poly_id long, pxmin double, pymin double, pxmax double, pymax double",
+        polygon_cover(spark, polys_parts, index).toDF(
+            "cell_id", "poly_id", "pxmin", "pymin", "pxmax", "pymax"
         )
     )
     with_bbox = feats.select(

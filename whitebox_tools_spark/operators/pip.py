@@ -12,23 +12,31 @@ Spark plan (designed for 10^12 points x broadcastable polygon set):
   1. cell-cover build (driver, tiny): each polygon's bbox cover at the index
      zoom -> (cell_id, poly_id, bbox, part geometry) rows. This is the
      sargable version of the reference's bbox prefilter (clip.rs:315-316).
+     The rows are one Arrow table, so the cover is a local relation
+     (LocalTableScan with exact size stats): no job unpickles Python rows
+     before the join can start.
   2. points get cell_id as a pure column expression (whole-stage codegen).
   3. broadcast hash join points.cell_id == cover.cell_id — no shuffle of the
      big side, ever.
   4. bbox filter as a column expression (cheap rejection).
   5. exact winding-number refinement:
-       method="expr" (default): the winding loop runs as a built-in
-         F.aggregate over the polygon's broadcast edge arrays — pure JVM
-         whole-stage codegen, zero Python, zero shuffle. (Benchmarked: the
-         Arrow/Python exchange was the scalability ceiling on many-core
-         executors; the expression path removed it.)
+       method="expr" (default): one SQL `aggregate` over the polygon's
+         parts, each part an inner `aggregate` over its broadcast edge
+         array — JVM only, no Python and no shuffle. The higher-order
+         functions are CodegenFallback in Spark 4.1, so the refine is
+         interpreted per candidate row inside an otherwise whole-stage
+         codegen'd stage. (Benchmarked: the Arrow/Python exchange was the
+         scalability ceiling on many-core executors; the expression path
+         removed it.)
        method="pandas": vectorized numpy kernel in mapInPandas — for
-         polygon sets with very large vertex counts where a codegen'd
-         per-row edge loop loses to Arrow batch transfer.
+         polygon sets with very large vertex counts where a per-row edge
+         loop loses to Arrow batch transfer.
 
 Both methods implement the identical crossing rules; tests pin equality.
 For polygon sets too large to broadcast, pass broadcast=False to shuffle on
-cell_id instead (both sides partitioned by cell — co-located equi-join).
+cell_id instead (both sides partitioned by cell — co-located sort-merge
+equi-join, forced by a hint since the cover's exact size would otherwise
+let Catalyst broadcast it).
 """
 
 from __future__ import annotations
@@ -37,66 +45,74 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark import geometry as G
 from whitebox_tools_spark.grid import CellIndex
 
-
-def _cover_rows(polys_parts, index: CellIndex):
-    """(cell_id, poly_id, xmin, ymin, xmax, ymax) bbox-cover rows."""
-    rows = []
-    for poly_id, parts in polys_parts:
-        xs = np.concatenate([p[0] for p in parts])
-        ys = np.concatenate([p[1] for p in parts])
-        xmin, ymin, xmax, ymax = float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())
-        for cid in index.cover_bbox(xmin, ymin, xmax, ymax):
-            rows.append((cid, poly_id, xmin, ymin, xmax, ymax))
-    return rows
+_EDGE = pa.struct([(c, pa.float64()) for c in ("x0", "y0", "x1", "y1")])
+_PART = pa.struct([("hole", pa.bool_()), ("edges", pa.list_(_EDGE))])
 
 
-def _cover_rows_with_geom(polys_parts, index: CellIndex):
-    """Cover rows carrying the polygon geometry as nested edge arrays:
-    (cell_id, poly_id, bbox..., parts: array<struct<idx, hole, edges>>)."""
-    rows = []
-    for poly_id, parts in polys_parts:
-        xs = np.concatenate([p[0] for p in parts])
-        ys = np.concatenate([p[1] for p in parts])
-        xmin, ymin, xmax, ymax = float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())
-        pstructs = []
-        for k, (pxs, pys, hole) in enumerate(parts):
-            edges = [
-                (float(pxs[i]), float(pys[i]), float(pxs[i + 1]), float(pys[i + 1]))
-                for i in range(len(pxs) - 1)
-            ]
-            pstructs.append((k, bool(hole), edges))
-        for cid in index.cover_bbox(xmin, ymin, xmax, ymax):
-            rows.append((cid, poly_id, xmin, ymin, xmax, ymax, pstructs))
-    return rows
+def polygon_cover(
+    spark: SparkSession, polys_parts, index: CellIndex, *, geometry: bool = False
+) -> DataFrame:
+    """Cell-cover rows (cell_id, poly_id, xmin, ymin, xmax, ymax) — one per
+    cell of each polygon's bbox cover — as a local relation built from one
+    Arrow table. With geometry=True the rows also carry the polygon as
+    parts: array<struct<hole, edges: array<struct<x0, y0, x1, y1>>>>, in
+    part order (the refine's later-part-wins rule depends on it)."""
+    pids, bbox, cells, owner = [], [], [], []
+    holes, part_offsets, edge_offsets = [], [0], [0]
+    coords = []  # per part: (4, n_edges) array of x0, y0, x1, y1
+    for k, (pid, parts) in enumerate(polys_parts):
+        xs = [np.asarray(p[0], dtype=np.float64) for p in parts]
+        ys = [np.asarray(p[1], dtype=np.float64) for p in parts]
+        ax, ay = np.concatenate(xs), np.concatenate(ys)
+        bb = (float(ax.min()), float(ay.min()), float(ax.max()), float(ay.max()))
+        cids = index.cover_bbox(*bb)
+        pids.append(int(pid))
+        bbox.append(bb)
+        cells += cids
+        owner += [k] * len(cids)
+        if geometry:
+            for pxs, pys, (_, _, hole) in zip(xs, ys, parts):
+                coords.append(np.stack([pxs[:-1], pys[:-1], pxs[1:], pys[1:]]))
+                holes.append(bool(hole))
+                edge_offsets.append(edge_offsets[-1] + coords[-1].shape[1])
+            part_offsets.append(len(holes))
 
-
-_COVER_GEOM_SCHEMA = (
-    "cell_id long, poly_id long, xmin double, ymin double, xmax double, ymax double, "
-    "parts array<struct<idx:int, hole:boolean, "
-    "edges:array<struct<x0:double, y0:double, x1:double, y1:double>>>>"
-)
-
-
-def _inside_expr(part, x, y):
-    """Even-odd winding containment of (x, y) in one part's edge array —
-    verbatim crossing rules from poly_ops.rs:41-72 as an F.aggregate."""
-
-    def step(acc, e):
-        is_left = (e["x1"] - e["x0"]) * (y - e["y0"]) - (x - e["x0"]) * (e["y1"] - e["y0"])
-        return acc + (
-            F.when((e["y0"] <= y) & (e["y1"] > y) & (is_left > 0), F.lit(1))
-            .when((e["y0"] > y) & (e["y1"] <= y) & (is_left < 0), F.lit(-1))
-            .otherwise(F.lit(0))
+    bb = np.asarray(bbox, dtype=np.float64).reshape(-1, 4)
+    cols = {"poly_id": pa.array(pids, pa.int64())}
+    cols.update({c: bb[:, i] for i, c in enumerate(("xmin", "ymin", "xmax", "ymax"))})
+    if geometry:
+        xy = np.concatenate(coords, axis=1) if coords else np.empty((4, 0))
+        edges = pa.StructArray.from_arrays(list(xy), fields=list(_EDGE))
+        part = pa.StructArray.from_arrays(
+            [pa.array(holes, pa.bool_()),
+             pa.ListArray.from_arrays(pa.array(edge_offsets, pa.int32()), edges)],
+            fields=list(_PART),
         )
+        cols["parts"] = pa.ListArray.from_arrays(pa.array(part_offsets, pa.int32()), part)
+    table = pa.table(cols).take(pa.array(owner, pa.int64()))
+    return spark.createDataFrame(table.add_column(0, "cell_id", pa.array(cells, pa.int64())))
 
-    wn = F.aggregate(part["edges"], F.lit(0), step)
-    return (wn % 2) != 0
+
+# Containment of (x, y) in one part `p`: parity of its edge crossings
+# (poly_ops.rs:41-72). Edge `e` crosses when it straddles y and the point is
+# strictly left of it going up, strictly right going down — is_left non-zero
+# with the sign of y1 - y0 — so an edge through the point (is_left == 0)
+# never counts. IF evaluates one branch: is_left is computed once per edge.
+_IS_LEFT = "((e.x1 - e.x0) * (y - e.y0) - (x - e.x0) * (e.y1 - e.y0))"
+_INSIDE = (
+    "aggregate(p.edges, false, (c, e) -> c != ((e.y0 <= y) != (e.y1 <= y)"
+    f" AND IF(e.y0 <= y, {_IS_LEFT} > 0, {_IS_LEFT} < 0)))"
+)
+# The hole flag of the last containing part decides (clip.rs:317-321): NULL
+# when no part contains the point (dropped by the filter), false for a shell.
+_KEEP = f"NOT aggregate(parts, CAST(NULL AS BOOLEAN), (h, p) -> IF({_INSIDE}, p.hole, h))"
 
 
 def points_in_polygons(
@@ -118,96 +134,35 @@ def points_in_polygons(
     join and refine untouched (e.g. a precomputed tile id; also what keeps
     streaming plans single-stream — no self-join to re-attach attributes).
     """
-    if method == "pandas":
-        return _points_in_polygons_pandas(
-            points, polys_parts, index,
-            point_id=point_id, x=x, y=y, broadcast=broadcast, carry_cols=carry_cols,
-        )
-
-    spark = points.sparkSession
-    cover = spark.createDataFrame(
-        _cover_rows_with_geom(polys_parts, index), _COVER_GEOM_SCHEMA
-    )
-    if broadcast:
-        cover = F.broadcast(cover)
+    use_pandas = method == "pandas"
+    cover = polygon_cover(points.sparkSession, polys_parts, index, geometry=not use_pandas)
+    cover = F.broadcast(cover) if broadcast else cover.hint("merge")
 
     carry = carry_cols or []
     pts = points.select(
         F.col(point_id).alias("point_id"),
         F.col(x).alias("x"),
         F.col(y).alias("y"),
-        index.cell_of_xy_expr(F.col(x), F.col(y)).alias("cell_id"),
         *[F.col(c) for c in carry],
     )
-    cand = pts.join(cover, "cell_id").filter(
-        (F.col("x") >= F.col("xmin"))
-        & (F.col("x") <= F.col("xmax"))
-        & (F.col("y") >= F.col("ymin"))
-        & (F.col("y") <= F.col("ymax"))
-    )
-
-    px, py = F.col("x"), F.col("y")
-    # parts containing the point; the LAST containing part (max idx) decides
-    # (clip.rs:317-321): keep iff it is a shell
-    containing = F.filter(
-        F.transform(
-            F.col("parts"),
-            lambda part: F.struct(
-                part["idx"].alias("idx"),
-                part["hole"].alias("hole"),
-                _inside_expr(part, px, py).alias("inside"),
-            ),
-        ),
-        lambda s: s["inside"],
-    )
-    winner = F.array_max(
-        F.transform(containing, lambda s: F.struct(s["idx"].alias("idx"), s["hole"].alias("hole")))
-    )
-    keep = (F.size(containing) > 0) & (~winner["hole"])
-    return cand.filter(keep).select("point_id", "poly_id", *carry)
+    # expressions as SQL text: one py4j call each instead of one per
+    # Column operator (hundreds per query), with the same analyzed plan
+    cell_id = index.cell_id_sql(index.ix_sql("x"), index.iy_sql("y"))
+    cand = pts.select("*", F.expr(cell_id).alias("cell_id")).join(cover, "cell_id")
+    in_bbox = "x >= xmin AND x <= xmax AND y >= ymin AND y <= ymax"
+    if use_pandas:
+        carry_schema = "".join(f", {c} {dict(points.dtypes)[c]}" for c in carry)
+        return _refine_pandas(
+            cand.filter(in_bbox).select("point_id", "x", "y", "poly_id", *carry),
+            polys_parts, carry, "point_id long, poly_id long" + carry_schema,
+        )
+    return cand.filter(f"{in_bbox} AND {_KEEP}").select("point_id", "poly_id", *carry)
 
 
-def _points_in_polygons_pandas(
-    points: DataFrame,
-    polys_parts: list,
-    index: CellIndex,
-    *,
-    point_id: str = "point_id",
-    x: str = "x",
-    y: str = "y",
-    broadcast: bool = True,
-    carry_cols: list[str] | None = None,
-) -> DataFrame:
+def _refine_pandas(cand: DataFrame, polys_parts: list, carry: list[str], schema: str) -> DataFrame:
     """Arrow/numpy refine path (see module docstring)."""
-    spark = points.sparkSession
-    cover = spark.createDataFrame(
-        _cover_rows(polys_parts, index),
-        "cell_id long, poly_id long, xmin double, ymin double, xmax double, ymax double",
-    )
-    if broadcast:
-        cover = F.broadcast(cover)
-
-    carry = carry_cols or []
-    pts = points.select(
-        F.col(point_id).alias("point_id"),
-        F.col(x).alias("x"),
-        F.col(y).alias("y"),
-        index.cell_of_xy_expr(F.col(x), F.col(y)).alias("cell_id"),
-        *[F.col(c) for c in carry],
-    )
-    cand = (
-        pts.join(cover, "cell_id")
-        .filter(
-            (F.col("x") >= F.col("xmin"))
-            & (F.col("x") <= F.col("xmax"))
-            & (F.col("y") >= F.col("ymin"))
-            & (F.col("y") <= F.col("ymax"))
-        )
-        .select("point_id", "x", "y", "poly_id", *carry)
-    )
-
     # broadcast the polygon geometry once per executor (not per task)
-    bc = spark.sparkContext.broadcast(
+    bc = cand.sparkSession.sparkContext.broadcast(
         {pid: [(np.asarray(xs), np.asarray(ys), bool(h)) for xs, ys, h in parts]
          for pid, parts in polys_parts}
     )
@@ -228,8 +183,7 @@ def _points_in_polygons_pandas(
             if keep_frames:
                 yield pd.concat(keep_frames, ignore_index=True)
 
-    carry_schema = "".join(f", {c} {dict(points.dtypes)[c]}" for c in carry)
-    return cand.mapInPandas(refine, schema="point_id long, poly_id long" + carry_schema)
+    return cand.mapInPandas(refine, schema=schema)
 
 
 def clip_points(
