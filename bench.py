@@ -34,56 +34,7 @@ BENCH_QUERIES = [
     "polygons_to_raster",
     "block_max_gridding",
     "raster_zip_ops",
-    "dedup_exact",
-    "minhash_lsh",
-    "token_count",
-    "quality_score",
-    "fingerprint",
-    "embedding_topk",
 ]
-
-# timed separately and reported inside the "ann" block: the headline suite
-# list is held fixed across rounds so the driver's BENCH_r{N} totals stay
-# like-for-like comparable (r1-r3 did not include the ANN path)
-ANN_BENCH_QUERY = "embedding_ann_multiprobe"
-
-
-def ann_recall_at5(spark) -> dict:
-    """recall@5 + candidate fraction of the scale-default ANN (auto planes,
-    8 adaptive probes, salting) vs exact cosine_topk on a deterministic
-    CLUSTERED corpus (the sf embeddings are iid-random, where top-5
-    'neighbours' are noise-level and no sublinear method can recall them —
-    clustered data is the regime ANN exists for). 20k 32-d vectors,
-    400 clusters, 40 queries."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from whitebox_tools_spark.operators import similarity as SIM
-
-    rng = np.random.default_rng(20260818)
-    centers = rng.standard_normal((400, 32))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    pts = np.repeat(centers, 50, axis=0) + 0.05 * rng.standard_normal((20_000, 32))
-    corpus = spark.createDataFrame(
-        [(int(i), [float(v) for v in p]) for i, p in enumerate(pts)],
-        "vec_id long, embedding array<double>",
-    ).repartition(32).cache()
-    n = corpus.count()
-    q = corpus.filter(F.col("vec_id") % 500 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    nq = q.count()
-    exact = {(r.query_id, r.vec_id)
-             for r in SIM.cosine_topk(corpus, q, 5).collect()}
-    n_cand = SIM.ann_candidate_pairs(corpus, q, dim=32, seed=3).count()
-    ann = {(r.query_id, r.vec_id)
-           for r in SIM.ann_topk_lsh(corpus, q, 5, dim=32, seed=3).collect()}
-    corpus.unpersist()
-    return {
-        "recall_at5": round(len(ann & exact) / max(len(exact), 1), 4),
-        "candidate_frac": round(n_cand / (n * nq), 5),
-    }
-
 
 def multiscale_radius_sweep(spark) -> dict:
     """Large-radius multiscale evidence: a dense 512x512 hash-noise DEM,
@@ -123,65 +74,6 @@ def multiscale_radius_sweep(spark) -> dict:
         out[label] = round(time.time() - t0, 3)
     dem.unpersist()
     return out
-
-
-def media_decode_throughput(spark, n_clips: int = 4000) -> dict:
-    """Real media decode throughput: n_clips PCM WAVE payloads (1 s @ 8 kHz
-    stereo each) built once, then extract_media_features(fake=False) +
-    audio_window_features timed end-to-end (Arrow-batched mapInPandas)."""
-    from whitebox_tools_spark.operators.multimodal import (
-        audio_window_features,
-        extract_media_features,
-    )
-
-    def gen(batches):
-        # runs on executors: each task synthesizes only its own clips, so
-        # no >1 MB task ships from the driver (round-4 WARN)
-        import numpy as np
-        import pandas as pd
-
-        from whitebox_tools_spark.operators.multimodal import encode_wav
-
-        t = np.arange(8000)
-        base = np.round(3000 * np.sin(t * 0.1)).astype(np.int16)
-        for pdf in batches:
-            ids = pdf["id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "doc_id": [f"c{i}" for i in ids],
-                    "media_ref": [f"aud/{i}" for i in ids],
-                    "payload": [
-                        encode_wav(
-                            np.stack([np.roll(base, i % 97),
-                                      -np.roll(base, i % 97)], axis=1),
-                            8000,
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    media = (
-        spark.range(n_clips)
-        .repartition(32)
-        .mapInPandas(gen, "doc_id string, media_ref string, payload binary")
-        .cache()
-    )
-    media.count()
-    t0 = time.time()
-    n1 = extract_media_features(media, fake=False).count()
-    feat_sec = time.time() - t0
-    t0 = time.time()
-    n2 = audio_window_features(media, window_ms=50).count()
-    win_sec = time.time() - t0
-    media.unpersist()
-    return {
-        "n_clips": n_clips,
-        "feature_sec": round(feat_sec, 3),
-        "clips_per_sec": round(n_clips / feat_sec, 1),
-        "window_rows": n2,
-        "window_sec": round(win_sec, 3),
-    }
 
 
 def hier_base_case_2m() -> dict:
@@ -257,109 +149,19 @@ def main():
     spark = get_spark(app_name="wts-bench")
     # warm-up: touch every table + spin up the Python worker pool once, so
     # per-query timings measure the operators, not JVM/worker cold start
-    for t in ["customer", "supplier", "part", "lineitem", "documents", "embeddings"]:
+    for t in ["customer", "supplier", "part", "lineitem"]:
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
     E.q_pip(spark, sf_dir).limit(1).count()
 
     qs = E.queries()
 
-    def bench_minhash_xx(spark, sf_dir):
-        # q_minhash_lsh runs the portable md5 hash family for the oracle
-        # gate; the production scale path is xxhash64 — time that one here
-        from whitebox_tools_spark.operators import dedup as DD
-
-        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        return DD.minhash_lsh_pairs(docs, bands=8, verify_threshold=0.7)
-
     timings = {}
     for name in BENCH_QUERIES:
-        fn = bench_minhash_xx if name == "minhash_lsh" else qs[name]
         t0 = time.time()
-        n = fn(spark, sf_dir).count()
+        qs[name](spark, sf_dir).count()
         timings[name] = round(time.time() - t0, 3)
-        _ = n
-
-    t0 = time.time()
-    _ = qs[ANN_BENCH_QUERY](spark, sf_dir).count()
-    ann_sec = round(time.time() - t0, 3)
-
-    ann_stats = ann_recall_at5(spark)
-    ann_stats["multiprobe_sf_sec"] = ann_sec
-    t0 = time.time()
-    _ = qs["embedding_pq_topk"](spark, sf_dir).count()
-    ann_stats["pq_sf_sec"] = round(time.time() - t0, 3)
-
-    # round-5 training-data additions, reported as their own block (the
-    # headline suite metric stays like-for-like across rounds)
-    dedup_extras = {}
-    t0 = time.time()
-    dedup_extras["duplicate_text_spans_rows"] = qs["duplicate_text_spans"](
-        spark, sf_dir
-    ).count()
-    dedup_extras["duplicate_text_spans_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["contamination_rows"] = qs["contamination_check"](
-        spark, sf_dir
-    ).count()
-    dedup_extras["contamination_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["gopher_pass_rows"] = (
-        qs["gopher_rules"](spark, sf_dir).filter("passes = 1").count()
-    )
-    dedup_extras["gopher_rules_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["token_budget_rows"] = qs["token_budget_sample"](
-        spark, sf_dir
-    ).count()
-    dedup_extras["token_budget_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["semantic_dedup_rows"] = qs["semantic_dedup_components"](
-        spark, sf_dir
-    ).count()
-    dedup_extras["semantic_dedup_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["unigram_lp_rows"] = qs["unigram_logprob_quality"](
-        spark, sf_dir
-    ).count()
-    dedup_extras["unigram_lp_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["pack_sequences_rows"] = qs["pack_sequences"](
-        spark, sf_dir
-    ).count()
-    dedup_extras["pack_sequences_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["curation_rows"] = qs["curation_pipeline"](
-        spark, sf_dir
-    ).count()
-    dedup_extras["curation_sec"] = round(time.time() - t0, 3)
-    # final-wave cleaning ops (each over the full documents table)
-    t0 = time.time()
-    dedup_extras["c4_keep_rows"] = (
-        qs["c4_rules"](spark, sf_dir).filter("keep_doc = 1").count()
-    )
-    dedup_extras["c4_rules_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["line_dedup_rows"] = qs["line_dedup"](spark, sf_dir).count()
-    dedup_extras["line_dedup_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["pii_rows"] = qs["pii_redaction"](spark, sf_dir).count()
-    dedup_extras["pii_redaction_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["dsir_rows"] = qs["dsir_importance"](spark, sf_dir).count()
-    dedup_extras["dsir_importance_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["gopher_rep_pass_rows"] = (
-        qs["gopher_repetition"](spark, sf_dir).filter("passes = 1").count()
-    )
-    dedup_extras["gopher_repetition_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    dedup_extras["remove_spans_rows"] = qs["remove_duplicate_spans"](
-        spark, sf_dir
-    ).count()
-    dedup_extras["remove_spans_sec"] = round(time.time() - t0, 3)
 
     ms_stats = multiscale_radius_sweep(spark)
-    media_stats = media_decode_throughput(spark)
     hier_stats = hier_base_case_2m()
 
     t0 = time.time()
@@ -377,10 +179,7 @@ def main():
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf),
-                "ann": ann_stats,
-                "dedup_extras": dedup_extras,
                 "multiscale_radius": ms_stats,
-                "media": media_stats,
                 "hier_base_2m": hier_stats,
                 "geodocs": {
                     "n_docs": n_docs,

@@ -39,13 +39,6 @@ def test_cover_bbox_superset():
     assert len(cover) == 2 * 3
 
 
-def test_ring_shell_offsets():
-    idx = CellIndex(0.0, 0.0, 1000.0, 4)
-    assert idx.ring_shell_offsets(0) == [(0, 0)]
-    assert len(idx.ring_shell_offsets(1)) == 8
-    assert len(idx.ring_shell_offsets(2)) == 16
-
-
 def test_cell_sql_matches_python():
     import duckdb
 

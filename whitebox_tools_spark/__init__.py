@@ -3,9 +3,7 @@
 Re-answers the analyses of the reference geoprocessing toolkit (WhiteboxTools
 v2.3.0, studied read-only at /root/reference) as distributed DataFrame
 pipelines: point-in-polygon overlay, kNN/IDW gridding, zonal statistics,
-raster<->vector conversion, deterministic tiling — plus the large-scale
-training-data operators (dedup, similarity search, text analysis) a 100 TB
-document pipeline needs.
+raster<->vector conversion, deterministic tiling.
 
 Architecture (NOT a port):
   - data model: long-form cell tables / typed geometry structs / flat point

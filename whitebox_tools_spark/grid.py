@@ -160,34 +160,6 @@ class CellIndex:
             + F.floor(iy / F.lit(1 << dz)).cast("long")
         )
 
-    def kring_cells_expr(self, ix: Column, iy: Column, ring: int) -> Column:
-        """Array of cell ids for the full (2r+1)^2 neighborhood, clamped to
-        the world. Explode this for a k-ring join. Mirrors the reference's
-        fixed 5x5-bin scan in FixedRadiusSearch
-        (whitebox-common/src/structures/fixed_radius_search.rs:98-120)."""
-        cells = []
-        n = self.n
-        for dx in range(-ring, ring + 1):
-            for dy in range(-ring, ring + 1):
-                nx, ny = ix + F.lit(dx), iy + F.lit(dy)
-                cid = self.cell_id_expr(nx, ny)
-                ok = (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
-                cells.append(F.when(ok, cid))
-        return F.array_compact(F.array(*cells))
-
-    def ring_shell_offsets(self, ring: int) -> list[tuple[int, int]]:
-        """Offsets of the hollow shell at exactly `ring` (for iterative
-        expansion: ring r adds only the shell, mirroring knn_search's
-        ring-by-ring widening, fixed_radius_search.rs:132-216)."""
-        if ring == 0:
-            return [(0, 0)]
-        out = []
-        for dx in range(-ring, ring + 1):
-            for dy in range(-ring, ring + 1):
-                if max(abs(dx), abs(dy)) == ring:
-                    out.append((dx, dy))
-        return out
-
     # --- SQL mirrors ---
     def ix_sql(self, x: str) -> str:
         return f"CAST(floor(({x} - {self.origin_x!r}) / {self.cell_size!r}) AS BIGINT)"

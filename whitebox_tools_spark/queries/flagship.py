@@ -24,22 +24,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 
-# The driver's correctness harness checks the FIRST 50 queries() entries each
-# round.  Rounds 1-4 certified 180 distinct queries.  The round-5 window leads
-# with the proof rows the round-4 judge demanded — lidar_normal_vectors (the
-# one r04 red row; signed-zero normalized on both engines this round) and the
-# seven solver-family rows that were rows-only in r04 and the five lidar
-# RANSAC-family rows (r04's no_oracle rows) — all now carrying value-checked
-# literal/serial-transcription oracles — then rotates the remaining 37 slots
-# onto never-driver-checked keys, prioritizing the judge's list: file-format
-# round trips, media queries, map/zip_ops_all, and the round-5 additions
-# (mosaic resampling, TrendSurfaceVectorPoints, the re-keyed
-# boundary_shape_complexity, the capped embankment_mapping, IVF-Flat ANN,
-# transitive near-dup components).
+# The correctness harness checks only the first 50 queries() entries, so these
+# lead and queries() fills the rest of the 50 from the base order.
 _DRIVER_WINDOW: list[str] = [
-    # r04 red row, root-caused signed zero — must be driver-green this round
     "lidar_normal_vectors",
-    # rows-only in r04, converted to value-checked oracles this round
     "breach_depressions_least_cost",
     "cost_distance",
     "cost_allocation",
@@ -47,72 +35,18 @@ _DRIVER_WINDOW: list[str] = [
     "mdinf_flow_accumulation",
     "quinn_flow_accumulation",
     "qin_flow_accumulation",
-    # never driver-checked: file-format round trips
     "shapefile_round_trip",
     "las_rgb_gps_round_trip",
-    # las_to_shapefile / las_to_multipoint_shapefile yielded their slots
-    # (both r4 judge-rerun green) to the never-externally-checked pair
-    "train_val_test_split",
-    "doc_containment",
     "las_to_zlidar",
     "zlidar_to_las",
-    # never driver-checked: media / multimodal
-    "media_features",
-    "media_resize_features",
-    "audio_window_features",
-    # never driver-checked: full map/zip registries
     "map_ops_all",
     "zip_ops_all",
-    # new or reworked this round
     "mosaic_bilinear",
     "mosaic_cc",
     "trend_surface_vector_points",
     "boundary_shape_complexity",
     "embankment_mapping",
-    "embedding_ivf_topk",
-    "minhash_dedup_components",
-    # round-5 additions, never seen by ANY external check — the round-4
-    # plugin family (vector_stream_network_analysis,
-    # correct_stream_vector_direction, repair_stream_vector_topology,
-    # local_quadratic_regression) yielded these slots: all four passed the
-    # r4 judge's full rerun, these four have never had an external row
-    "c4_rules",
-    "line_dedup",
-    "pii_redaction",
-    "dsir_importance",
-    "gopher_repetition",
-    # conditioned_latin_hypercube, travelling_salesman_problem and
-    # turning_bands_simulation yielded their slots (all r4 judge-rerun
-    # green) to never-externally-checked round-5 additions
-    "pack_sequences",
-    "unigram_logprob_quality",
-    "curation_pipeline",
-    # never driver-checked: overlay / vector
-    # new round-5 training-data ops (never seen by ANY external check —
-    # the r4 judge rerun covered everything older; polygonize,
-    # split_with_lines and deviation_from_regional_direction yielded their
-    # slots: all passed the r4 judge rerun, these three have never had an
-    # external row)
-    "gopher_rules",
-    "token_budget_sample",
-    "semantic_dedup_components",
-    "duplicate_text_spans",
-    "contamination_check",
-    "stratified_sample",
-    "embedding_pq_topk",
-    # never driver-checked: terrain / hydro / image
-    # new this round: --remove_embankments mode (last embankment caveat)
     "embankment_removal",
-    # average_normal_vector_angular_deviation yielded its slot (r4
-    # judge-rerun green) to the never-externally-checked removal op
-    "remove_duplicate_spans",
-    # spherical_std_dev_of_normals and individual_tree_detection yielded
-    # their slots (both r4 judge-rerun green) to the two newest
-    # never-externally-checked queries
-    "media_dedup",
-    "language_id_multi",
-    # no_oracle rows in r04, converted to value-checked literal
-    # serial-transcription oracles this round (serial_lidar.py)
     "lidar_ransac_planes",
     "lidar_segmentation",
     "lidar_segmentation_based_filter",
@@ -304,11 +238,8 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "export_table_to_csv": q_export_table_to_csv,
         "block_min_gridding": q_block_min_gridding,
         "las_to_ascii": q_las_to_ascii,
-        "media_features": q_media_features,
-        "media_resize_features": q_media_resize_features,
         "las_rgb_gps_round_trip": q_las_rgb_gps_round_trip,
         "shapefile_round_trip": q_shapefile_round_trip,
-        "audio_window_features": q_audio_window_features,
         "construct_vector_tin_invariants": q_construct_vector_tin_points,
         "lidar_rooftop_analysis": q_lidar_rooftop_analysis,
         "qin_flow_accumulation": q_qin_flow_accumulation,
@@ -569,42 +500,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lidar_filter_classes": q_lidar_filter_classes,
         "lidar_block_minimum": q_lidar_block_minimum,
         "lidar_block_maximum": q_lidar_block_maximum,
-        "dedup_exact": q_dedup_exact,
-        "ngram_jaccard": q_ngram_jaccard,
-        "ngram_jaccard_prefix": q_ngram_jaccard_prefix,
-        "duplicate_text_spans": q_duplicate_text_spans,
-        "contamination_check": q_contamination_check,
-        "stratified_sample": q_stratified_sample,
-        "minhash_lsh": q_minhash_lsh,
-        "minhash_dedup_components": q_minhash_components,
-        "semantic_dedup_components": q_semantic_dedup,
-        "curation_pipeline": q_curation_pipeline,
-        "simhash_near_dup": q_simhash,
-        "token_count": q_token_count,
-        "bpe_token_count": q_bpe_count,
-        "quality_score": q_quality,
-        "gopher_rules": q_gopher_rules,
-        "token_budget_sample": q_token_budget_sample,
-        "unigram_logprob_quality": q_unigram_logprob,
-        "pack_sequences": q_pack_sequences,
-        "c4_rules": q_c4_rules,
-        "gopher_repetition": q_gopher_repetition,
-        "remove_duplicate_spans": q_remove_duplicate_spans,
-        "media_dedup": q_media_dedup,
-        "language_id_multi": q_language_id_multi,
-        "train_val_test_split": q_train_val_test_split,
-        "doc_containment": q_doc_containment,
-        "line_dedup": q_line_dedup,
-        "pii_redaction": q_pii_redaction,
-        "dsir_importance": q_dsir_importance,
-        "language_id": q_langid,
-        "fingerprint": q_fingerprint,
-        "embedding_topk": q_embed_topk,
-        "embedding_near_dup": q_embed_near_dup,
-        "embedding_ann_lsh": q_embed_ann_lsh,
-        "embedding_ann_multiprobe": q_embed_ann_multiprobe,
-        "embedding_ivf_topk": q_embed_ivf_topk,
-        "embedding_pq_topk": q_embed_pq_topk,
         "clip_lines": q_clip_lines,
         "erase_lines": q_erase_lines,
         "polygon_overlay": q_polygon_overlay,
@@ -1328,11 +1223,8 @@ FROM range({P2R_GRID.rows * P2R_GRID.cols}) AS t(i)
         "csv_points_to_vector": _csv_points_sql(),
         "export_table_to_csv": "SELECT n_nationkey, n_name FROM nation",
         "block_min_gridding": _block_min_sql(),
-        "media_features": _media_features_sql(),
-        "media_resize_features": _media_resize_sql(),
         "las_rgb_gps_round_trip": _las_rgb_gps_sql(),
         "shapefile_round_trip": _shapefile_sql(),
-        "audio_window_features": _audio_windows_sql(),
         "las_to_ascii": f"""
 SELECT round(x, 6) AS x, round(y, 6) AS y, round(z, 6) AS z, classification
 FROM ({_ZLIDAR_CLOUD_SQL_BODY} FROM ({_order_cloud_cte()}) oc)
@@ -1705,102 +1597,6 @@ FROM ({_cloud_ext_cte()}) t WHERE abs(scan_angle) <= 10.0
         "kmeans_clustering": _kmeans_sql(),
         "modified_kmeans_clustering": _modified_kmeans_sql(),
         "pca": _pca_values_sql(),
-        "dedup_exact": """
-SELECT min(doc_id) AS doc_id, text, count(*) AS n_dups FROM documents GROUP BY text
-""",
-        "ngram_jaccard": _ngram_jaccard_sql(),
-        "ngram_jaccard_prefix": _ngram_jaccard_sql(),
-        "duplicate_text_spans": DD.duplicate_text_spans_oracle_sql(
-            "documents", k=8, min_len=10
-        ),
-        "contamination_check": DD.contamination_check_oracle_sql(
-            "SELECT * FROM documents WHERE doc_id % 10 != 0",
-            "SELECT * FROM documents WHERE doc_id % 10 = 0",
-            k=8,
-        ),
-        "stratified_sample": (
-            "SELECT doc_id, source, lang, n_chars FROM ("
-            + DD.stratified_sample_oracle_sql(
-                "SELECT * FROM documents", _MIX, seed=7, default=0.1
-            )
-            + ")"
-        ),
-        "token_count": """
-SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens
-FROM documents
-""",
-        "bpe_token_count": r"""
-SELECT doc_id, len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]+')) AS n_pieces
-FROM documents
-""",
-        "quality_score": _quality_sql(),
-        "gopher_rules": _gopher_rules_sql(min_words=30, min_stop_hits=1),
-        "unigram_logprob_quality": TX.unigram_logprob_quality_oracle_sql(),
-        "pack_sequences": DD.pack_sequences_oracle_sql(
-            "SELECT * FROM documents", 512
-        ),
-        "c4_rules": TX.c4_rules_oracle_sql(_LINED_SQL),
-        "gopher_repetition": TX.gopher_repetition_oracle_sql(_PAGED_SQL),
-        "remove_duplicate_spans": DD.remove_duplicate_spans_oracle_sql(_SLOGAN_SQL, k=8),
-        "media_dedup": _MEDIA_DEDUP_SQL,
-        "language_id_multi": TX.language_id_multi_oracle_sql(_MULTILANG_SQL),
-        "train_val_test_split": DD.train_val_test_split_oracle_sql(),
-        "doc_containment": DD.doc_containment_oracle_sql("(" + _PAIRWISE_SQL + ")", k=8, min_len=10),
-        "line_dedup": DD.dedup_lines_oracle_sql(_LINED_SQL),
-        "pii_redaction": TX.pii_redact_oracle_sql(_PII_SQL),
-        "dsir_importance": TX.dsir_importance_oracle_sql(),
-        "token_budget_sample": (
-            "SELECT doc_id, source, n_tokens FROM ("
-            + DD.token_budget_sample_oracle_sql(
-                "SELECT * FROM documents", _TOKEN_BUDGETS, default=700
-            )
-            + ") t"
-        ),
-        "language_id": _langid_sql(),
-        "fingerprint": _fingerprint_sql(),
-        "embedding_topk": _embed_topk_sql(),
-        "embedding_near_dup": _embed_near_dup_sql(),
-        "embedding_ann_lsh": _embed_ann_sql(),
-        "embedding_ann_multiprobe": _embed_ann_multiprobe_sql(),
-        "embedding_ivf_topk": _embed_ivf_sql(),
-        "embedding_pq_topk": SIM.pq_topk_oracle_sql(
-            5, m=4, ksub=8, iters=2, rerank=4
-        ),
-        "minhash_lsh": DD.minhash_lsh_oracle_sql(
-            "SELECT doc_id, text FROM documents",
-            num_hashes=32, bands=8, verify_threshold=0.7,
-        ),
-        "minhash_dedup_components": DD.near_dup_components_oracle_sql(
-            DD.minhash_lsh_oracle_sql(
-                "SELECT doc_id, text FROM documents",
-                num_hashes=32, bands=8, verify_threshold=0.7,
-            )
-        ),
-        "semantic_dedup_components": DD.near_dup_components_oracle_sql(
-            SIM.semantic_dedup_pairs_oracle_sql(nlist=16, tau=0.40)
-        ),
-        "curation_pipeline": (
-            "WITH g AS ("
-            + _gopher_rules_sql(min_words=30, min_stop_hits=1)
-            + "), kept AS (SELECT d.* FROM documents d JOIN g "
-            "ON d.doc_id = g.doc_id AND g.passes = 1), "
-            "canon AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY text), "
-            "dd AS (SELECT k.* FROM kept k JOIN canon USING (doc_id)), "
-            "samp AS ("
-            + DD.stratified_sample_oracle_sql(
-                "SELECT * FROM dd", _CURATION_FRACTIONS, default=0.5, seed=13
-            )
-            + ") SELECT source, count(*) AS n_docs, "
-            "sum(CASE WHEN length(trim(text)) = 0 THEN 0 "
-            "ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) AS n_tokens "
-            "FROM samp GROUP BY source"
-        ),
-        "simhash_near_dup": "SELECT doc_id_a, doc_id_b, hamming::BIGINT AS hamming FROM ("
-        + DD.simhash_near_dup_oracle_sql(
-            "SELECT doc_id, text FROM documents", max_hamming=6, bits=60
-        )
-        + ")",
         "clip_lines": _ovl.clip_lines_oracle_sql(_cust_segs_cte(), PARTS, erase=False),
         "erase_lines": _ovl.clip_lines_oracle_sql(_cust_segs_cte(), PARTS, erase=True),
         "polygon_overlay": _ovl.overlay_oracle_sql(PARTS_A, PARTS),

@@ -2203,100 +2203,6 @@ def _construct_tin_sql() -> str:
     )
 
 
-# --- real multimodal decode (netpbm images + PCM WAVE audio; no codec libs
-# needed) ---------------------------------------------------------------------
-
-
-def _media_arrays():
-    """Deterministic source arrays for the media fixture: 6 P5 grayscale
-    images, 6 P6 RGB images, 6 stereo int16 WAV clips."""
-    import numpy as np
-
-    out = []
-    for i in range(6):
-        h, w = 8 + i, 10 + 2 * i
-        img = (
-            (np.arange(h)[:, None] * 31 + np.arange(w)[None, :] * 17 + i * 7) % 251
-        ).astype(np.uint8)
-        out.append((f"d{i}", f"img/p5/{i}", "image", img, None))
-    for i in range(6):
-        h, w = 6 + i, 9 + i
-        img = (
-            (
-                np.arange(h)[:, None, None] * 13
-                + np.arange(w)[None, :, None] * 29
-                + np.arange(3)[None, None, :] * 61
-                + i
-            )
-            % 241
-        ).astype(np.uint8)
-        out.append((f"d{6 + i}", f"img/p6/{i}", "image", img, None))
-    for i in range(6):
-        n = 800 + 160 * i  # several 20 ms windows at 8 kHz
-        t = np.arange(n)
-        s = (np.round(3000 * np.sin(t * (0.1 + 0.01 * i))) + ((t * 37) % 11) - 5).astype(
-            np.int16
-        )
-        st = np.stack([s, (-(s // 2)).astype(np.int16)], axis=1)
-        out.append((f"d{12 + i}", f"aud/{i}", "audio", st, 8000 + i * 100))
-    return out
-
-
-def _media_df(spark):
-    from whitebox_tools_spark.operators.multimodal import encode_netpbm, encode_wav
-
-    rows = []
-    for doc_id, ref, kind, arr, rate in _media_arrays():
-        payload = encode_wav(arr, rate) if kind == "audio" else encode_netpbm(arr)
-        rows.append((doc_id, ref, kind, bytearray(payload)))
-    return spark.createDataFrame(
-        rows, "doc_id string, media_ref string, media_type string, payload binary"
-    )
-
-
-def _media_expected_features():
-    """INDEPENDENT feature computation from the construction arrays (never
-    touches the engine's decoders — a decode bug cannot cancel out)."""
-    import numpy as np
-
-    out = []
-    for doc_id, ref, kind, arr, rate in _media_arrays():
-        if kind == "image":
-            img = arr.astype(np.float64)
-            if img.ndim == 2:
-                img = img[:, :, None]
-            h, w, c = img.shape
-            if c == 3:
-                cm = [float(img[:, :, k].mean()) for k in range(3)]
-            else:
-                cm = [float(img[:, :, 0].mean()), 0.0, 0.0]
-            v = [
-                1.0, float(c), float(w), float(h),
-                float(img.mean()), float(img.std()),
-                float(img.min()), float(img.max()),
-                cm[0], cm[1], cm[2],
-                float(img[0, :, :].mean()), float(img[:, 0, :].mean()),
-                float(img[h // 2, w // 2, 0]), 0.0, 0.0,
-            ]
-        else:
-            x = arr.astype(np.float64)
-            mono = x.mean(axis=1)
-            zc = int(
-                np.count_nonzero(np.signbit(mono[1:]) != np.signbit(mono[:-1]))
-            )
-            v = [
-                2.0, float(arr.shape[1]), float(rate), float(arr.shape[0]),
-                float(x.mean()), float(x.std()), float(x.min()), float(x.max()),
-                float(mono[0]), float(mono[-1]), float(np.abs(mono).mean()),
-                float(zc), 0.0, 0.0, 0.0, 0.0,
-            ]
-        out.append((doc_id, ref, v))
-    return out
-
-
-_MEDIA_FCOLS = [f"f{i}" for i in range(16)]
-
-
 def q_shapefile_round_trip(spark, sf_dir):
     """ESRI Shapefile codec (whitebox-vector/src/shapefile/geometry.rs
     ShapeType Polygon + dBase III attributes — the reference's native
@@ -2409,154 +2315,6 @@ SELECT round(x, 6) AS x, round(y, 6) AS y, round(z, 6) AS z,
        CAST(point_id * 181 % 65536 AS INT) AS blue
 FROM ({_ZLIDAR_CLOUD_SQL_BODY} FROM ({_order_cloud_cte()}) oc)
 """
-
-
-def q_media_features(spark, sf_dir):
-    """REAL media decode + feature extraction (beyond-reference training-data
-    op): netpbm P5/P6 images and PCM WAVE audio parsed in-task by Arrow-
-    batched mapInPandas (pure numpy/stdlib — the honest subset of formats
-    this container can decode; compressed codecs still raise). Value-checked
-    against features computed independently from the construction arrays."""
-    from whitebox_tools_spark.operators.multimodal import extract_media_features
-
-    out = extract_media_features(_media_df(spark), fake=False)
-    return out.select(
-        "doc_id",
-        "media_ref",
-        *[
-            F.round(F.element_at("features", i + 1), 6).alias(c)
-            for i, c in enumerate(_MEDIA_FCOLS)
-        ],
-    )
-
-
-def q_media_resize_features(spark, sf_dir):
-    """Nearest-neighbour image resize (decode -> index-sample -> re-encode)
-    chained into feature extraction; oracle resamples the construction
-    arrays directly."""
-    from whitebox_tools_spark.operators.multimodal import (
-        extract_media_features,
-        resize_image_nn,
-    )
-
-    imgs = _media_df(spark).filter(F.col("media_type") == "image")
-    small = resize_image_nn(imgs, out_w=7, out_h=6)
-    out = extract_media_features(
-        small.withColumn("media_type", F.lit("image")), fake=False
-    )
-    return out.select(
-        "doc_id",
-        *[
-            F.round(F.element_at("features", i + 1), 6).alias(c)
-            for i, c in enumerate(_MEDIA_FCOLS)
-        ],
-    )
-
-
-def q_audio_window_features(spark, sf_dir):
-    """Windowed audio features over REAL WAVE decode (training-data op):
-    per-clip 20 ms windows, one row per window with mean/rms/peak of the
-    mono mix; oracle windows the construction arrays independently."""
-    from whitebox_tools_spark.operators.multimodal import audio_window_features
-
-    aud = _media_df(spark).filter(F.col("media_type") == "audio")
-    out = audio_window_features(aud, window_ms=20)
-    return out.select(
-        "doc_id", "win_idx", "n",
-        F.round("mean", 6).alias("mean"),
-        F.round("rms", 6).alias("rms"),
-        F.round("peak", 6).alias("peak"),
-    )
-
-
-def _audio_windows_sql() -> str:
-    import numpy as np
-
-    rows = []
-    for doc_id, ref, kind, arr, rate in _media_arrays():
-        if kind != "audio":
-            continue
-        mono = arr.astype(np.float64).mean(axis=1)
-        wlen = max(1, (rate * 20) // 1000)
-        step = wlen
-        for wi, start in enumerate(range(0, len(mono), step)):
-            seg = mono[start : start + wlen]
-            if not len(seg):
-                break
-            rows.append(
-                f"('{doc_id}', {wi}, {len(seg)}, {float(seg.mean())!r}, "
-                f"{float(np.sqrt((seg * seg).mean()))!r}, "
-                f"{float(np.abs(seg).max())!r})"
-            )
-    return (
-        "SELECT doc_id, win_idx, n, ROUND(CAST(mean AS DOUBLE), 6) AS mean, "
-        "ROUND(CAST(rms AS DOUBLE), 6) AS rms, "
-        "ROUND(CAST(peak AS DOUBLE), 6) AS peak FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(doc_id, win_idx, n, mean, rms, peak)"
-    )
-
-
-def _media_lit(v):
-    import math as _m
-
-    return "CAST('nan' AS DOUBLE)" if isinstance(v, float) and _m.isnan(v) else repr(
-        float(v)
-    )
-
-
-def _media_features_sql() -> str:
-    rows = []
-    for doc_id, ref, v in _media_expected_features():
-        rows.append(
-            f"('{doc_id}', '{ref}', " + ", ".join(_media_lit(x) for x in v) + ")"
-        )
-    cols = ", ".join(
-        f"ROUND(CAST({c} AS DOUBLE), 6) AS {c}" for c in _MEDIA_FCOLS
-    )
-    return (
-        f"SELECT doc_id, media_ref, {cols} FROM (VALUES "
-        + ", ".join(rows)
-        + f") AS t(doc_id, media_ref, {', '.join(_MEDIA_FCOLS)})"
-    )
-
-
-def _media_resize_sql() -> str:
-    import numpy as np
-
-    rows = []
-    out_h, out_w = 6, 7
-    for doc_id, ref, kind, arr, rate in _media_arrays():
-        if kind != "image":
-            continue
-        h, w = arr.shape[:2]
-        ri = (np.arange(out_h) * h) // out_h
-        ci = (np.arange(out_w) * w) // out_w
-        img = (arr[np.ix_(ri, ci)]).astype(np.float64)
-        if img.ndim == 2:
-            img = img[:, :, None]
-        hh, ww, c = img.shape
-        if c == 3:
-            cm = [float(img[:, :, k].mean()) for k in range(3)]
-        else:
-            cm = [float(img[:, :, 0].mean()), 0.0, 0.0]
-        v = [
-            1.0, float(c), float(ww), float(hh),
-            float(img.mean()), float(img.std()),
-            float(img.min()), float(img.max()),
-            cm[0], cm[1], cm[2],
-            float(img[0, :, :].mean()), float(img[:, 0, :].mean()),
-            float(img[hh // 2, ww // 2, 0]), 0.0, 0.0,
-        ]
-        rows.append(f"('{doc_id}', " + ", ".join(_media_lit(x) for x in v) + ")")
-    cols = ", ".join(
-        f"ROUND(CAST({c} AS DOUBLE), 6) AS {c}" for c in _MEDIA_FCOLS
-    )
-    return (
-        f"SELECT doc_id, {cols} FROM (VALUES "
-        + ", ".join(rows)
-        + f") AS t(doc_id, {', '.join(_MEDIA_FCOLS)})"
-    )
 
 
 HACH_GRID = GridSpec(west=0.0, north=208.0, res_x=8.0, res_y=8.0, rows=26, cols=26)
