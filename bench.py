@@ -34,6 +34,11 @@ BENCH_QUERIES = [
     "polygons_to_raster",
     "block_max_gridding",
     "raster_zip_ops",
+    "dedup_exact",
+    "minhash_lsh",
+    "token_count",
+    "quality_score",
+    "fingerprint",
 ]
 
 def multiscale_radius_sweep(spark) -> dict:
@@ -149,17 +154,90 @@ def main():
     spark = get_spark(app_name="wts-bench")
     # warm-up: touch every table + spin up the Python worker pool once, so
     # per-query timings measure the operators, not JVM/worker cold start
-    for t in ["customer", "supplier", "part", "lineitem"]:
+    for t in ["customer", "supplier", "part", "lineitem", "documents"]:
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
     E.q_pip(spark, sf_dir).limit(1).count()
 
     qs = E.queries()
 
+    def bench_minhash_xx(spark, sf_dir):
+        # q_minhash_lsh runs the portable md5 hash family for the oracle
+        # gate; the production scale path is xxhash64 — time that one here
+        from whitebox_tools_spark.operators import dedup as DD
+
+        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        return DD.minhash_lsh_pairs(docs, bands=8, verify_threshold=0.7)
+
     timings = {}
     for name in BENCH_QUERIES:
+        fn = bench_minhash_xx if name == "minhash_lsh" else qs[name]
         t0 = time.time()
-        qs[name](spark, sf_dir).count()
+        fn(spark, sf_dir).count()
         timings[name] = round(time.time() - t0, 3)
+
+    # round-5 training-data additions, reported as their own block (the
+    # headline suite metric stays like-for-like across rounds)
+    dedup_extras = {}
+    t0 = time.time()
+    dedup_extras["duplicate_text_spans_rows"] = qs["duplicate_text_spans"](
+        spark, sf_dir
+    ).count()
+    dedup_extras["duplicate_text_spans_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["contamination_rows"] = qs["contamination_check"](
+        spark, sf_dir
+    ).count()
+    dedup_extras["contamination_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["gopher_pass_rows"] = (
+        qs["gopher_rules"](spark, sf_dir).filter("passes = 1").count()
+    )
+    dedup_extras["gopher_rules_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["token_budget_rows"] = qs["token_budget_sample"](
+        spark, sf_dir
+    ).count()
+    dedup_extras["token_budget_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["unigram_lp_rows"] = qs["unigram_logprob_quality"](
+        spark, sf_dir
+    ).count()
+    dedup_extras["unigram_lp_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["pack_sequences_rows"] = qs["pack_sequences"](
+        spark, sf_dir
+    ).count()
+    dedup_extras["pack_sequences_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["curation_rows"] = qs["curation_pipeline"](
+        spark, sf_dir
+    ).count()
+    dedup_extras["curation_sec"] = round(time.time() - t0, 3)
+    # final-wave cleaning ops (each over the full documents table)
+    t0 = time.time()
+    dedup_extras["c4_keep_rows"] = (
+        qs["c4_rules"](spark, sf_dir).filter("keep_doc = 1").count()
+    )
+    dedup_extras["c4_rules_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["line_dedup_rows"] = qs["line_dedup"](spark, sf_dir).count()
+    dedup_extras["line_dedup_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["pii_rows"] = qs["pii_redaction"](spark, sf_dir).count()
+    dedup_extras["pii_redaction_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["dsir_rows"] = qs["dsir_importance"](spark, sf_dir).count()
+    dedup_extras["dsir_importance_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["gopher_rep_pass_rows"] = (
+        qs["gopher_repetition"](spark, sf_dir).filter("passes = 1").count()
+    )
+    dedup_extras["gopher_repetition_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    dedup_extras["remove_spans_rows"] = qs["remove_duplicate_spans"](
+        spark, sf_dir
+    ).count()
+    dedup_extras["remove_spans_sec"] = round(time.time() - t0, 3)
 
     ms_stats = multiscale_radius_sweep(spark)
     hier_stats = hier_base_case_2m()
@@ -179,6 +257,7 @@ def main():
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf),
+                "dedup_extras": dedup_extras,
                 "multiscale_radius": ms_stats,
                 "hier_base_2m": hier_stats,
                 "geodocs": {

@@ -18,7 +18,7 @@ import duckdb
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "embeddings",
+    "lineitem", "events", "documents", "embeddings",
 ]
 
 

@@ -21,6 +21,8 @@ HEADLINE = [
     "tile_counts",
     "nn_gridding",
     "polygons_to_raster",
+    "dedup_exact",
+    "minhash_lsh",
     "line_intersections",
     "d8_flow_accumulation",
     "union_rings",
@@ -28,9 +30,27 @@ HEADLINE = [
     "fd8_flow_accumulation",
     "cost_distance",
     "max_diff_from_mean_tiled",
+    "ngram_jaccard_prefix",
     "topographic_hachures",
     # round-5 additions
     "embankment_removal",
+    "duplicate_text_spans",
+    "contamination_check",
+    "stratified_sample",
+    "gopher_rules",
+    "token_budget_sample",
+    "curation_pipeline",
+    "unigram_logprob_quality",
+    "pack_sequences",
+    "c4_rules",
+    "line_dedup",
+    "pii_redaction",
+    "dsir_importance",
+    "gopher_repetition",
+    "remove_duplicate_spans",
+    "language_id_multi",
+    "train_val_test_split",
+    "doc_containment",
 ]
 
 

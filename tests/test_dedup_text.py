@@ -1,9 +1,8 @@
-"""Dedup / text / similarity suite tests (property + oracle style)."""
+"""Dedup / text suite tests (property + oracle style)."""
 
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark.operators import dedup as DD
-from whitebox_tools_spark.operators import similarity as SIM
 from whitebox_tools_spark.operators import text as TX
 
 
@@ -180,55 +179,6 @@ def test_fingerprint_deterministic_and_distinct(spark):
     b = {r.doc_id: r.fp for r in TX.fingerprint(_docs(spark)).collect()}
     assert a == b
     assert a[0] == a[1] and a[0] != a[3]
-
-
-def _emb(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    base = rng.standard_normal((8, 16))
-    rows = []
-    for i in range(8):
-        rows.append((i, [float(v) for v in base[i]]))
-        # a near-duplicate of each: tiny perturbation
-        rows.append((100 + i, [float(v) for v in base[i] + rng.standard_normal(16) * 0.01]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_cosine_topk_exact(spark):
-    emb = _emb(spark)
-    q = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = SIM.cosine_topk(emb, q, 2).collect()
-    top1 = {r.query_id: r.vec_id for r in out if r.rank == 1}
-    top2 = {r.query_id: r.vec_id for r in out if r.rank == 2}
-    assert top1 == {0: 0, 1: 1}  # self first (cosine 1)
-    assert top2 == {0: 100, 1: 101}  # near-dup second
-
-
-def test_embedding_near_dup_lsh_recall(spark):
-    emb = _emb(spark)
-    pairs = {(r.id_a, r.id_b)
-             for r in DD.embedding_near_dup_pairs(
-                 emb, vec_id="vec_id", vec="embedding",
-                 threshold=0.99, n_planes=6, dim=16).collect()}
-    # random-hyperplane buckets keep near-identical vectors together almost surely
-    found = sum(1 for i in range(8) if (i, 100 + i) in pairs)
-    assert found >= 6
-
-
-def test_ann_lsh_subset_of_exact(spark):
-    emb = _emb(spark)
-    q = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {(r.query_id, r.vec_id) for r in SIM.cosine_topk(emb, q, 1).collect()}
-    ann = {(r.query_id, r.vec_id)
-           for r in SIM.ann_topk_lsh(emb, q, 1, n_planes=4, n_probes=4, dim=16).collect()
-           if r.rank == 1}
-    # self-match is always in the same bucket -> rank-1 identical
-    assert ann == exact
 
 
 def test_portable_md5_family_pipelines(spark):

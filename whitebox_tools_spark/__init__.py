@@ -3,7 +3,9 @@
 Re-answers the analyses of the reference geoprocessing toolkit (WhiteboxTools
 v2.3.0, studied read-only at /root/reference) as distributed DataFrame
 pipelines: point-in-polygon overlay, kNN/IDW gridding, zonal statistics,
-raster<->vector conversion, deterministic tiling.
+raster<->vector conversion, deterministic tiling — plus the large-scale
+training-data operators (dedup, text analysis) a 100 TB
+document pipeline needs.
 
 Architecture (NOT a port):
   - data model: long-form cell tables / typed geometry structs / flat point

@@ -1,10 +1,10 @@
 """Deduplication suite for large-scale document pipelines.
 
 These go beyond the reference's operator set (it has no text tooling): exact
-dedup, character/shingle Jaccard near-dup, MinHash+LSH, SimHash, and
-embedding-cosine near-dup — each designed so the expensive comparison only
-happens inside candidate buckets (band/bucket equi-joins), never as a global
-cross join, which is what survives 10^12 documents.
+dedup, character/shingle Jaccard near-dup, MinHash+LSH and SimHash — each
+designed so the expensive comparison only happens inside candidate buckets
+(band/bucket equi-joins), never as a global cross join, which is what
+survives 10^12 documents.
 
 Determinism: MinHash/SimHash permutations derive from xxhash64 with fixed
 seeds (JVM-side, codegen); shingle sets use array built-ins. No Python in
@@ -634,37 +634,6 @@ cand AS (
 SELECT doc_id_a, doc_id_b, bit_count(xor(sh_a, sh_b)) AS hamming
 FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= {max_hamming}
 """
-
-
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    *,
-    vec_id: str = "vec_id",
-    vec: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 12,
-    seed: int = 11,
-    dim: int = 64,
-) -> DataFrame:
-    """Embedding-cosine near-dup via random-hyperplane LSH buckets + exact
-    cosine verify inside buckets (see similarity.py for the plane
-    construction). -> (id_a, id_b, cosine)."""
-    from whitebox_tools_spark.operators.similarity import hyperplane_bucket_expr, cosine_expr
-
-    d = embeddings.select(
-        F.col(vec_id).alias("id"),
-        F.col(vec).cast("array<double>").alias("v"),
-    ).withColumn("bucket", hyperplane_bucket_expr(F.col("v"), n_planes=n_planes, seed=seed, dim=dim))
-    # triangle-chunked self-join (see bucket_pair_candidates): a hot
-    # hyperplane bucket (near-duplicate embedding cluster) fans out
-    pairs = bucket_pair_candidates(
-        d, ["bucket"], "id", payload=["v"], out_a="id_a", out_b="id_b"
-    )
-    return (
-        pairs.withColumn("cosine", cosine_expr(F.col("v_a"), F.col("v_b")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
 
 
 def near_dup_components(pairs: DataFrame, *, a: str = "doc_id_a", b: str = "doc_id_b") -> DataFrame:

@@ -1953,6 +1953,156 @@ FROM feat
 """
 
 
+def _ngram_jaccard_sql() -> str:
+    return """
+WITH d AS (
+  SELECT doc_id,
+         list_distinct(list_transform(
+           generate_series(1, greatest(length(text) - 2, 1)),
+           i -> substr(text, CAST(i AS INTEGER), 3))) AS sh
+  FROM documents
+),
+pairs AS (
+  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, a.sh AS sa, b.sh AS sb
+  FROM d a CROSS JOIN d b WHERE a.doc_id < b.doc_id
+)
+SELECT doc_id_a, doc_id_b,
+       round(CAST(len(list_intersect(sa, sb)) AS DOUBLE)
+             / len(list_distinct(list_concat(sa, sb))), 6) AS jaccard
+FROM pairs
+WHERE CAST(len(list_intersect(sa, sb)) AS DOUBLE)
+      / len(list_distinct(list_concat(sa, sb))) >= 0.5
+"""
+
+
+_STOP_SQL = "(" + ",".join(f"'{w}'" for w in TX.EN_STOPWORDS) + ")"
+
+
+def _quality_sql() -> str:
+    return f"""
+WITH t AS (
+  SELECT doc_id, text, length(text) AS n_chars,
+         CASE WHEN length(trim(text)) = 0 THEN 0
+              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
+         length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct,
+         CASE WHEN length(trim(text)) = 0 THEN 0
+              ELSE len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                                   w -> lower(w) IN {_STOP_SQL})) END AS n_stop
+  FROM documents
+)
+SELECT doc_id, n_chars, n_tokens,
+       round(CASE WHEN n_tokens > 0 THEN CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens ELSE 0.0 END, 6) AS mean_tok_len,
+       round(CASE WHEN n_chars > 0 THEN CAST(n_punct AS DOUBLE) / n_chars ELSE 0.0 END, 6) AS punct_ratio,
+       round(CASE WHEN n_tokens > 0 THEN CAST(n_stop AS DOUBLE) / n_tokens ELSE 0.0 END, 6) AS stop_ratio,
+       round(CASE WHEN n_tokens >= 10 AND n_tokens <= 100000 THEN 1.0 ELSE 0.0 END
+             * (1.0 - CASE WHEN n_chars > 0 THEN CAST(n_punct AS DOUBLE) / n_chars ELSE 0.0 END)
+             * least(CASE WHEN n_tokens > 0 THEN CAST(n_stop AS DOUBLE) / n_tokens ELSE 0.0 END * 4.0, 1.0), 6) AS quality
+FROM t
+"""
+
+
+_GOPHER_STOP_LIST_SQL = "[" + ",".join(f"'{w}'" for w in TX.GOPHER_STOPWORDS) + "]"
+
+
+def _gopher_rules_sql(min_words: int = 50, min_stop_hits: int = 2) -> str:
+    """Independent DuckDB mirror of gopher_quality_filter. passes evaluates
+    on UNROUNDED values, exactly like the engine; output doubles round to
+    6 dp. min_words/min_stop_hits parameterized so the query can use
+    corpus-appropriate values (the synthetic vocab holds only one Gopher
+    stop word); the other thresholds are the paper's defaults."""
+    return f"""
+WITH t AS (
+  SELECT doc_id, text,
+         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
+              ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
+  FROM documents
+),
+m AS (
+  SELECT doc_id,
+         CAST(len(toks) AS BIGINT) AS n_words,
+         COALESCE(list_sum(list_transform(toks, w -> CAST(length(w) AS BIGINT))), 0) AS word_chars,
+         CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS alpha_words,
+         length(text) - length(replace(text, '#', '')) AS n_hash,
+         (length(text) - length(replace(text, '...', ''))) / 3 AS n_ellipsis,
+         CAST(len(list_filter({_GOPHER_STOP_LIST_SQL},
+                              s -> list_contains(list_transform(toks, w -> lower(w)), s))) AS BIGINT) AS stop_hits,
+         len(string_split(text, chr(10))) AS n_lines,
+         len(string_split(text, chr(10))) - len(list_distinct(string_split(text, chr(10)))) AS n_dup_lines,
+         toks
+  FROM t
+),
+g AS (
+  SELECT doc_id, max(cnt * gchars) AS top2_mass
+  FROM (
+    SELECT doc_id, gram, count(*) AS cnt, CAST(length(gram) - 1 AS BIGINT) AS gchars
+    FROM (
+      SELECT m.doc_id, m.toks[i] || ' ' || m.toks[i + 1] AS gram
+      FROM m, unnest(generate_series(1, len(m.toks) - 1)) AS u(i)
+    )
+    GROUP BY doc_id, gram
+  )
+  GROUP BY doc_id
+),
+j AS (
+  SELECT m.*,
+         CASE WHEN m.n_words > 0 THEN CAST(m.word_chars AS DOUBLE) / m.n_words ELSE 0.0 END AS mean_word_len_u,
+         CASE WHEN m.n_words > 0 THEN CAST(m.alpha_words AS DOUBLE) / m.n_words ELSE 0.0 END AS alpha_frac_u,
+         CASE WHEN m.n_words > 0 THEN CAST(m.n_hash + m.n_ellipsis AS DOUBLE) / m.n_words ELSE 0.0 END AS symbol_ratio_u,
+         CASE WHEN m.n_lines > 0 THEN CAST(m.n_dup_lines AS DOUBLE) / m.n_lines ELSE 0.0 END AS dup_line_frac_u,
+         CASE WHEN m.word_chars > 0 THEN CAST(COALESCE(g.top2_mass, 0) AS DOUBLE) / m.word_chars ELSE 0.0 END AS top2_char_frac_u
+  FROM m LEFT JOIN g ON m.doc_id = g.doc_id
+)
+SELECT doc_id, n_words,
+       round(mean_word_len_u, 6) AS mean_word_len,
+       round(alpha_frac_u, 6) AS alpha_frac,
+       round(symbol_ratio_u, 6) AS symbol_ratio,
+       stop_hits,
+       round(dup_line_frac_u, 6) AS dup_line_frac,
+       round(top2_char_frac_u, 6) AS top2_char_frac,
+       CAST(n_words >= {min_words} AND n_words <= 100000
+            AND mean_word_len_u >= 3.0 AND mean_word_len_u <= 10.0
+            AND alpha_frac_u >= 0.8 AND symbol_ratio_u <= 0.1
+            AND stop_hits >= {min_stop_hits} AND dup_line_frac_u <= 0.3
+            AND top2_char_frac_u <= 0.20 AS BIGINT) AS passes
+FROM j
+"""
+
+
+def _langid_sql() -> str:
+    return f"""
+WITH t AS (
+  SELECT doc_id,
+         CASE WHEN length(trim(text)) = 0 THEN 0
+              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
+         CASE WHEN length(trim(text)) = 0 THEN 0
+              ELSE len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                                   w -> lower(w) IN {_STOP_SQL})) END AS n_stop
+  FROM documents
+)
+SELECT doc_id,
+       round(CASE WHEN n_tokens > 0 THEN CAST(n_stop AS DOUBLE) / n_tokens ELSE 0.0 END, 6) AS stop_ratio,
+       CASE WHEN (CASE WHEN n_tokens > 0 THEN CAST(n_stop AS DOUBLE) / n_tokens ELSE 0.0 END) >= 0.08
+            THEN 'en' ELSE 'unknown' END AS pred_lang
+FROM t
+"""
+
+
+def _fingerprint_sql() -> str:
+    return """
+WITH t AS (
+  SELECT doc_id,
+         CASE WHEN length(trim(text)) = 0 THEN []::BIGINT[]
+              ELSE list_transform(regexp_split_to_array(trim(text), '\\s+'),
+                                  tok -> CAST(length(tok) AS BIGINT) * 7919 + ascii(tok)) END AS codes
+  FROM documents
+)
+SELECT doc_id,
+       list_reduce(list_prepend(CAST(0 AS BIGINT), codes),
+                   (acc, c) -> (acc * 1000003 + c) % 2147483647) AS fp
+FROM t
+"""
+
+
 def _kmeans_sql() -> str:
     from whitebox_tools_spark.operators.ml import lloyd_kmeans_oracle_sql
 
@@ -2112,3 +2262,4 @@ def _lidar_rooftop_sql() -> str:
             f"FROM (VALUES {', '.join(rows)}) AS t(b, s, n, zmin, zmax, cx, cy)"
         )
     return _LIDAR_ORACLE_MEMO["rooftop"]
+

@@ -1,4 +1,4 @@
-"""Query bodies: SF-independent solver fixtures, hydro/terrain/cost families, ML."""
+"""Query bodies: SF-independent solver fixtures, hydro/terrain/cost families, ML, training-data suite."""
 
 # Shared flat namespace: each queries/ module layers on its predecessor so
 # the package behaves exactly like the original single registry module
@@ -2153,6 +2153,7 @@ def q_elevation_slice(spark, sf_dir):
     return out.select("point_id", F.round("z", 6).alias("z"))
 
 
+# --- training-data suite ---------------------------------------------------
 def q_lidar_ground_filter(spark, sf_dir):
     """LidarGroundPointFilter slope mode
     (lidar_analysis/lidar_ground_point_filter.rs:513-538) on a thinned
@@ -2196,3 +2197,557 @@ SELECT i.pid AS point_id,
             ELSE coalesce(k.ms, -1e308) > {t!r} END AS is_off_terrain
 FROM inr i LEFT JOIN knn k ON k.pid = i.pid
 """
+
+
+def q_dedup_exact(spark, sf_dir):
+    return DD.exact_dedup(_t(spark, sf_dir, "documents"))
+
+
+def q_ngram_jaccard(spark, sf_dir):
+    # banded: log-ratio length bands, 3x key fan-out; exact-complete, so
+    # the all-pairs DuckDB oracle certifies it directly. Candidate volume
+    # is sum(|band|^2) — mid-scale path; 100-TB traffic goes to 'prefix'.
+    return _r6(
+        DD.ngram_jaccard_pairs(
+            _t(spark, sf_dir, "documents"), threshold=0.5, banded=True
+        ),
+        ["jaccard"],
+    )
+
+
+def q_ngram_jaccard_prefix(spark, sf_dir):
+    """PPJoin prefix-filtered exact Jaccard (the 100-TB candidate path:
+    global df-ordered shingles, each doc indexes its |A|-ceil(t|A|)+1
+    rarest, candidates equi-join on indexed shingles only). Same exact
+    output as all-pairs, so the same DuckDB oracle certifies it."""
+    return _r6(
+        DD.ngram_jaccard_pairs(
+            _t(spark, sf_dir, "documents"), threshold=0.5, method="prefix"
+        ),
+        ["jaccard"],
+    )
+
+
+def q_duplicate_text_spans(spark, sf_dir):
+    """Exact duplicate-SPAN detection (substring dedup, Lee et al. 2022):
+    maximal runs of >= 10 consecutive tokens shared verbatim between two
+    documents — k=8 gram matches grouped by (pair, diagonal) and merged
+    by the island trick; the gram self-join rides the triangle-chunked
+    bucket_pair_candidates so boilerplate grams can't serialize a task.
+    Oracle: a naive-join DuckDB mirror of the same gram/diagonal/island
+    construction."""
+    return DD.duplicate_text_spans(
+        _t(spark, sf_dir, "documents"), k=8, min_len=10
+    )
+
+
+def q_contamination_check(spark, sf_dir):
+    """Test-set contamination scan (decontamination pass): every tenth
+    doc_id is the held-out eval set; each remaining train doc reports how
+    many of its distinct 8-grams appear anywhere in the eval set. The
+    distinct eval-gram set is broadcast, so the train side never
+    shuffles."""
+    docs = _t(spark, sf_dir, "documents")
+    return DD.contamination_check(
+        docs.filter(F.col("doc_id") % 10 != 0),
+        docs.filter(F.col("doc_id") % 10 == 0),
+        k=8,
+    )
+
+
+_MIX = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.75}
+
+
+def q_stratified_sample(spark, sf_dir):
+    """Deterministic domain-mixture sampling: per-source quota fractions,
+    selection a pure function of (doc_id, seed) via the portable 60-bit
+    hash — one map-side filter, reproducible on any partitioning."""
+    out = DD.stratified_sample(
+        _t(spark, sf_dir, "documents"), _MIX, seed=7, default=0.1
+    )
+    return out.select("doc_id", "source", "lang", "n_chars")
+
+
+def q_minhash_lsh(spark, sf_dir):
+    """MinHash+LSH with the engine-portable md5 hash family — the full
+    pipeline (shingle hash, 32 universal-hash permutations, 8-band keys,
+    signature-agreement verify) is hash-checked against a DuckDB mirror.
+    The synthetic corpus is heavily templated (a third of all pairs sit
+    above jaccard 0.5), so the query uses a steep band curve (8 bands x
+    4 rows) with verify 0.7 — "find the strong dups in a sea of mild
+    similarity". bench.py separately times the xxhash64 production path."""
+    return DD.minhash_lsh_pairs(
+        _t(spark, sf_dir, "documents"),
+        num_hashes=32, bands=8, verify_threshold=0.7, hash_family="md5",
+    )
+
+
+def q_simhash(spark, sf_dir):
+    """SimHash near-dups with the portable md5 family (60-bit fingerprints,
+    7 pigeonhole bands for max_hamming=6) — hash-checked vs DuckDB."""
+    out = DD.simhash_near_dup_pairs(
+        _t(spark, sf_dir, "documents"), max_hamming=6, bits=60, hash_family="md5"
+    )
+    return out.select("doc_id_a", "doc_id_b", F.col("hamming").cast("long").alias("hamming"))
+
+
+def q_minhash_components(spark, sf_dir):
+    """Transitive near-dup clusters over the MinHash+LSH pair graph
+    (keep-one-per-CLUSTER dedup needs components, not edges): min-label +
+    pointer-doubling connected components, component = min reachable doc
+    id, plus the cluster size. Value-checked against a DuckDB recursive-CTE
+    transitive closure over the identical portable-md5 pair query."""
+    pairs = DD.minhash_lsh_pairs(
+        _t(spark, sf_dir, "documents"),
+        num_hashes=32, bands=8, verify_threshold=0.7, hash_family="md5",
+    )
+    comp = DD.near_dup_components(pairs)
+    sz = comp.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
+    return comp.join(sz, "component").select("doc_id", "component", "csize")
+
+
+_CURATION_FRACTIONS = {f"src{i}": 0.3 + 0.05 * i for i in range(10)}
+
+
+def q_curation_pipeline(spark, sf_dir):
+    """End-to-end training-data curation pass, the composition a real
+    pipeline runs: Gopher quality filter (corpus thresholds) -> exact
+    dedup keep-min-id -> deterministic stratified mixture sampling
+    (src0-src9 explicit fractions, 0.5 default) -> per-source document
+    and token report. Every stage is an existing value-checked operator;
+    this query certifies that they COMPOSE (schema contracts, join keys,
+    determinism end-to-end), one aggregate per stage, no UDFs."""
+    docs = _t(spark, sf_dir, "documents")
+    g = TX.gopher_quality_filter(docs, min_words=30, min_stop_hits=1)
+    kept = docs.join(
+        g.filter(F.col("passes") == 1).select("doc_id"), "doc_id"
+    )
+    canon = kept.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
+    deduped = kept.join(canon.select("doc_id"), "doc_id")
+    sampled = DD.stratified_sample(
+        deduped, _CURATION_FRACTIONS, default=0.5, seed=13
+    )
+    return (
+        sampled.select(
+            "source",
+            F.size(TX.tokens_expr(F.col("text"))).cast("long").alias("nt"),
+        )
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("nt").alias("n_tokens"),
+        )
+    )
+
+
+def q_token_count(spark, sf_dir):
+    return TX.token_count(_t(spark, sf_dir, "documents"))
+
+
+def q_bpe_count(spark, sf_dir):
+    return TX.bpe_ish_token_count(_t(spark, sf_dir, "documents"))
+
+
+def q_quality(spark, sf_dir):
+    return _r6(TX.quality_score(_t(spark, sf_dir, "documents")),
+               ["mean_tok_len", "punct_ratio", "stop_ratio", "quality"])
+
+
+_TOKEN_BUDGETS = {f"src{i}": 400 + 60 * i for i in range(10)}
+
+
+def q_token_budget_sample(spark, sf_dir):
+    """Per-source token-budget mixing: take docs in portable-hash order
+    until each source's cumulative token count hits its budget (src0-src9
+    explicit budgets 400..940, the other ten sources the 700 default).
+    Engine runs the two-phase bucket plan; the oracle replays the NAIVE
+    full running-sum rule, so the match validates the decomposition."""
+    out = DD.token_budget_sample(
+        _t(spark, sf_dir, "documents"), _TOKEN_BUDGETS, default=700
+    )
+    return out.select("doc_id", "source", "n_tokens")
+
+
+def q_gopher_rules(spark, sf_dir):
+    """Gopher quality-rule filter (Rae et al. 2021 App. A1.1, published
+    thresholds): per-doc rule inputs + 0/1 passes flag. Rules 1-6 are one
+    codegen'd scan; the top-2-gram repetition rule is the only aggregate
+    (explode -> map-side-combined count -> per-doc max -> equi-join).
+    min_words/min_stop_hits lowered to corpus-appropriate values (the
+    synthetic vocab holds a single Gopher stop word) so the flag splits;
+    all other thresholds are the paper's published defaults."""
+    out = TX.gopher_quality_filter(_t(spark, sf_dir, "documents"),
+                                   min_words=30, min_stop_hits=1)
+    return _r6(out, ["mean_word_len", "alpha_frac", "symbol_ratio",
+                     "dup_line_frac", "top2_char_frac"])
+
+
+def q_pack_sequences(spark, sf_dir):
+    """Deterministic sequence packing: global token-tape offsets in
+    portable-hash order, cut into 512-token training sequences. Engine runs
+    the bucketed parallel-prefix plan; the oracle replays the naive single
+    global running sum, so the match validates the decomposition."""
+    return DD.pack_sequences(_t(spark, sf_dir, "documents"), 512)
+
+
+def q_unigram_logprob(spark, sf_dir):
+    """CCNet-family LM quality proxy: per-doc mean token log-prob under the
+    corpus's own unigram distribution (9-dp scaled-integer quantization
+    makes the float fold order- and engine-invariant)."""
+    return TX.unigram_logprob_quality(_t(spark, sf_dir, "documents"))
+
+
+def q_langid(spark, sf_dir):
+    return _r6(TX.language_id(_t(spark, sf_dir, "documents")), ["stop_ratio"])
+
+
+def q_fingerprint(spark, sf_dir):
+    return TX.fingerprint(_t(spark, sf_dir, "documents"))
+
+
+# ---------------------------------------------------------------------------
+# round-5 additions: C4 cleaning, corpus line dedup, PII scrub, DSIR
+# ---------------------------------------------------------------------------
+def _lined_docs(docs: DataFrame) -> DataFrame:
+    """Deterministically rebuild each synthetic doc as a 6-line 'page'
+    (the corpus has no newlines/punctuation) so the line-level rules have
+    real structure to act on: sentence-like lines from token slices, a
+    too-short line, a rotating terminal-punct line, planted javascript /
+    lorem-ipsum / brace / boilerplate lines keyed on doc_id. Mirrored
+    byte-for-byte by _LINED_SQL."""
+    toks = TX.tokens_expr(F.col("text"))
+
+    def seg(a: int, b: int):
+        return F.array_join(F.slice(toks, a, b - a + 1), " ")
+
+    did = F.col("doc_id")
+    l1 = F.concat(seg(1, 8), F.lit("."))
+    l2 = seg(9, 11)
+    l3 = F.concat(
+        seg(12, 20), F.when(did % 3 == 0, F.lit("!")).otherwise(F.lit(""))
+    )
+    l4 = F.when(
+        did % 7 == 0,
+        F.lit("please enable javascript to view this page content now."),
+    ).otherwise(F.concat(seg(21, 27), F.lit("?")))
+    l5 = F.when(
+        did % 2 == 0, F.lit("subscribe to our newsletter today.")
+    ).otherwise(F.lit("thanks for reading this fine article."))
+    l6 = (
+        F.when(did % 11 == 0, F.lit("lorem ipsum dolor sit amet."))
+        .when(did % 13 == 0, F.lit("config { x }"))
+        .otherwise(F.concat(seg(1, 8), F.lit(".")))
+    )
+    return docs.select(
+        "doc_id", F.concat_ws("\n", l1, l2, l3, l4, l5, l6).alias("text")
+    )
+
+
+def _lined_seg_sql(a: int, b: int) -> str:
+    return f"COALESCE(array_to_string(toks[{a}:{b}], ' '), '')"
+
+
+_LINED_SQL = f"""
+SELECT doc_id,
+       {_lined_seg_sql(1, 8)} || '.' || chr(10)
+    || {_lined_seg_sql(9, 11)} || chr(10)
+    || {_lined_seg_sql(12, 20)}
+       || (CASE WHEN doc_id % 3 = 0 THEN '!' ELSE '' END) || chr(10)
+    || (CASE WHEN doc_id % 7 = 0
+             THEN 'please enable javascript to view this page content now.'
+             ELSE {_lined_seg_sql(21, 27)} || '?' END) || chr(10)
+    || (CASE WHEN doc_id % 2 = 0 THEN 'subscribe to our newsletter today.'
+             ELSE 'thanks for reading this fine article.' END) || chr(10)
+    || (CASE WHEN doc_id % 11 = 0 THEN 'lorem ipsum dolor sit amet.'
+             WHEN doc_id % 13 = 0 THEN 'config {{ x }}'
+             ELSE {_lined_seg_sql(1, 8)} || '.' END) AS text
+FROM (
+  SELECT doc_id,
+         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
+              ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
+  FROM documents
+)
+"""
+
+
+def q_c4_rules(spark, sf_dir):
+    """C4 cleaning heuristics (Raffel et al. 2020 §2.2, published rules)
+    over deterministically line-structured pages: terminal-punctuation /
+    >= 5-word / no-javascript line filter, lorem-ipsum / brace / < 3-line
+    page filter. One whole-stage-codegen scan, zero shuffles; the cleaned
+    page text itself is value-checked against the DuckDB mirror."""
+    return TX.c4_quality_filter(_lined_docs(_t(spark, sf_dir, "documents")))
+
+
+def q_line_dedup(spark, sf_dir):
+    """CCNet-style corpus-level line dedup (Wenzek et al. 2020): lines
+    repeated verbatim across the corpus (planted boilerplate + natural
+    short-vocab collisions) are removed everywhere; per-doc text is
+    reassembled in original line order. One line-count aggregate + one
+    anti-join + one per-doc reassembly aggregate."""
+    return DD.dedup_lines(_lined_docs(_t(spark, sf_dir, "documents")))
+
+
+def _pii_docs(docs: DataFrame) -> DataFrame:
+    """Append deterministic synthetic PII (2 emails, 1 IPv4, 1 phone,
+    keyed on doc_id) to every doc — the corpus itself contains no digits
+    or @, so every match the scrubber finds is planted and exactly
+    mirrored by _PII_SQL."""
+    did = F.col("doc_id")
+    t2 = F.concat(
+        F.col("text"),
+        F.lit(" contact user"), did.cast("string"),
+        F.lit("@example.com or admin"), (did % 50).cast("string"),
+        F.lit("@test.org visit 10."), (did % 256).cast("string"),
+        F.lit(".0.1 call +1 555 00"), (did % 10).cast("string"),
+        F.lit(" 12"), (did % 89).cast("string"), F.lit(" now"),
+    )
+    return docs.select("doc_id", t2.alias("text"))
+
+
+_PII_SQL = """
+SELECT doc_id,
+       text || ' contact user' || CAST(doc_id AS VARCHAR)
+            || '@example.com or admin' || CAST(doc_id % 50 AS VARCHAR)
+            || '@test.org visit 10.' || CAST(doc_id % 256 AS VARCHAR)
+            || '.0.1 call +1 555 00' || CAST(doc_id % 10 AS VARCHAR)
+            || ' 12' || CAST(doc_id % 89 AS VARCHAR) || ' now' AS text
+FROM documents
+"""
+
+
+def q_pii_redaction(spark, sf_dir):
+    """PII scrub over docs with planted emails/IPv4/phone: per-class
+    counts + the fully redacted text, value-checked byte-for-byte. Pure
+    regex column expressions — one codegen'd scan, zero shuffles."""
+    return TX.pii_redact(_pii_docs(_t(spark, sf_dir, "documents")))
+
+
+def q_dsir_importance(spark, sf_dir):
+    """DSIR importance weights (Xie et al. 2023): hashed-bigram bucket
+    log-ratio of target (source in src0..src4) vs raw distributions,
+    add-1 smoothed, 9-dp scaled-integer fold (exact long arithmetic,
+    partition-order invariant). Explode -> 256-row bucket aggregate ->
+    broadcast joins -> one per-doc aggregate."""
+    return TX.dsir_importance(_t(spark, sf_dir, "documents"))
+
+
+def _paged_docs(docs: DataFrame) -> DataFrame:
+    """Deterministically rebuild each doc as a 3-paragraph page (lines
+    inside paragraphs, blank line between paragraphs) with planted
+    repetition: doc_id % 4 duplicates a line, doc_id % 5 duplicates a
+    whole paragraph — so every branch of the Gopher repetition family
+    fires on a known subset. Mirrored byte-for-byte by _PAGED_SQL."""
+    toks = TX.tokens_expr(F.col("text"))
+
+    def seg(a: int, b: int):
+        return F.array_join(F.slice(toks, a, b - a + 1), " ")
+
+    did = F.col("doc_id")
+    lA, lB = seg(1, 6), seg(7, 12)
+    lC = F.when(did % 4 == 0, seg(1, 6)).otherwise(seg(13, 18))
+    lD = seg(19, 24)
+    p1 = F.concat_ws("\n", lA, lB)
+    p2 = F.when(did % 5 == 0, p1).otherwise(F.concat_ws("\n", lC, lD))
+    p3 = seg(25, 30)
+    return docs.select(
+        "doc_id", F.concat_ws("\n\n", p1, p2, p3).alias("text")
+    )
+
+
+_PAGED_SQL = """
+SELECT doc_id,
+       p1 || chr(10) || chr(10)
+    || (CASE WHEN doc_id % 5 = 0 THEN p1
+             ELSE lC || chr(10) || lD END) || chr(10) || chr(10)
+    || p3 AS text
+FROM (
+  SELECT doc_id,
+         lA || chr(10) || lB AS p1,
+         CASE WHEN doc_id % 4 = 0 THEN lA ELSE lX END AS lC,
+         lD, p3
+  FROM (
+    SELECT doc_id,
+           COALESCE(array_to_string(toks[1:6], ' '), '') AS lA,
+           COALESCE(array_to_string(toks[7:12], ' '), '') AS lB,
+           COALESCE(array_to_string(toks[13:18], ' '), '') AS lX,
+           COALESCE(array_to_string(toks[19:24], ' '), '') AS lD,
+           COALESCE(array_to_string(toks[25:30], ' '), '') AS p3
+    FROM (
+      SELECT doc_id,
+             CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
+                  ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
+      FROM documents
+    )
+  )
+)
+"""
+
+
+def q_gopher_repetition(spark, sf_dir):
+    """The complete Gopher repetition family (Rae et al. 2021 Table A1:
+    dup line/para fractions + char fractions, top-{2,3,4}-gram char mass,
+    dup-{5..10}-gram distinct-covered-position char fractions, published
+    thresholds) over deterministically paged docs with planted duplicate
+    lines (doc_id%4) and paragraphs (doc_id%5). Every rule is an
+    explode -> keyed hash aggregate -> equi-join — no windows, no UDFs."""
+    return TX.gopher_repetition(_paged_docs(_t(spark, sf_dir, "documents")))
+
+
+def _slogan_docs(docs: DataFrame) -> DataFrame:
+    """Append deterministic repeated material for the span-removal rule:
+    docs with doc_id % 3 == 0 share a verbatim 12-token slogan (5 full
+    8-grams -> removed everywhere but the canonical doc); the others get
+    a 7-token filler (NO full 8-gram fits inside it, and its boundary
+    grams mix in doc-specific text, so it is never removed — pins the
+    k-token detection floor); docs with doc_id % 17 == 0 additionally
+    repeat their own leading 8 tokens at the tail (a within-doc duplicate
+    — the later occurrence is removed). Mirrored by _SLOGAN_SQL."""
+    did = F.col("doc_id")
+    toks = TX.tokens_expr(F.col("text"))
+    lead8 = F.array_join(F.slice(toks, 1, 8), " ")
+    t2 = F.concat(
+        F.col("text"),
+        F.lit(" "),
+        F.when(
+            did % 3 == 0,
+            F.lit("the quick brown fox jumps over the lazy dog again and again"),
+        ).otherwise(F.lit("completely ordinary filler phrase that varies nowhere")),
+        F.when(did % 17 == 0, F.concat(F.lit(" "), lead8)).otherwise(F.lit("")),
+    )
+    return docs.select("doc_id", t2.alias("text"))
+
+
+_SLOGAN_SQL = """
+SELECT doc_id,
+       text || ' '
+    || (CASE WHEN doc_id % 3 = 0
+             THEN 'the quick brown fox jumps over the lazy dog again and again'
+             ELSE 'completely ordinary filler phrase that varies nowhere' END)
+    || (CASE WHEN doc_id % 17 = 0
+             THEN ' ' || COALESCE(array_to_string(toks[1:8], ' '), '')
+             ELSE '' END) AS text
+FROM (
+  SELECT doc_id, text,
+         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
+              ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
+  FROM documents
+)
+"""
+
+
+def q_remove_duplicate_spans(spark, sf_dir):
+    """Exact-substring dedup REMOVAL (Lee et al. 2022 position-marking
+    variant over 8-grams): duplicated k-grams keep only their globally
+    smallest (doc_id, pos) occurrence; every other occurrence's covered
+    tokens are cut and docs are rebuilt in order. Planted 12-token slogan
+    (removed everywhere but one doc), 7-token filler (below the k floor —
+    never removed), within-doc tail repeats (doc_id%17). The rebuilt
+    text is value-checked byte-for-byte."""
+    return DD.remove_duplicate_spans(
+        _slogan_docs(_t(spark, sf_dir, "documents")), k=8
+    )
+
+
+def _multilang_docs(docs: DataFrame) -> DataFrame:
+    """Rebuild a four-language corpus deterministically: doc_id % 4 picks
+    the language; non-English docs repeat a stopword-laden phrase
+    (doc_id % 3 + 1 times) so its function words dominate; English docs
+    keep the corpus text (its vocabulary contains 'the'). doc_id % 31 == 0
+    docs become stopword-free noise -> 'unknown'. Mirrored by
+    _MULTILANG_SQL."""
+    did = F.col("doc_id")
+    reps = (did % 3 + 1).cast("int")
+    fr = F.array_join(
+        F.array_repeat(F.lit("le chat et les oiseaux dans la maison pour sur"), reps), " "
+    )
+    de = F.array_join(
+        F.array_repeat(F.lit("der hund und die katze mit ein buch von zu"), reps), " "
+    )
+    es = F.array_join(
+        F.array_repeat(F.lit("el perro y las aves en que una casa por es"), reps), " "
+    )
+    t2 = (
+        F.when(did % 31 == 0, F.lit("zzz qqq www rrr ttt yyy uuu"))
+        .when(did % 4 == 1, fr)
+        .when(did % 4 == 2, de)
+        .when(did % 4 == 3, es)
+        .otherwise(F.col("text"))
+    )
+    return docs.select("doc_id", t2.alias("text"))
+
+
+_MULTILANG_SQL = """
+SELECT doc_id,
+       CASE WHEN doc_id % 31 = 0 THEN 'zzz qqq www rrr ttt yyy uuu'
+            WHEN doc_id % 4 = 1 THEN array_to_string(list_transform(
+                generate_series(1, CAST(doc_id % 3 + 1 AS INT)),
+                x -> 'le chat et les oiseaux dans la maison pour sur'), ' ')
+            WHEN doc_id % 4 = 2 THEN array_to_string(list_transform(
+                generate_series(1, CAST(doc_id % 3 + 1 AS INT)),
+                x -> 'der hund und die katze mit ein buch von zu'), ' ')
+            WHEN doc_id % 4 = 3 THEN array_to_string(list_transform(
+                generate_series(1, CAST(doc_id % 3 + 1 AS INT)),
+                x -> 'el perro y las aves en que una casa por es'), ' ')
+            ELSE text END AS text
+FROM documents
+"""
+
+
+def q_language_id_multi(spark, sf_dir):
+    """Multi-language ID (stopword-profile argmax over de/en/es/fr, the
+    dependency-free Cavnar-Trenkle core) on a deterministically rebuilt
+    four-language corpus + planted stopword-free noise docs ('unknown').
+    One codegen'd scan, zero shuffles; all four ratios value-checked."""
+    return TX.language_id_multi(_multilang_docs(_t(spark, sf_dir, "documents")))
+
+
+def q_train_val_test_split(spark, sf_dir):
+    """Deterministic train/val/test assignment: u = portable md5-prefix
+    hash of (seed, doc_id) scaled to [0,1); bands test < 0.05, val next
+    0.05, train the rest. Pure map-side expression — re-runs on a grown
+    corpus never reassign an existing doc."""
+    return DD.train_val_test_split(_t(spark, sf_dir, "documents"))
+
+
+def _pairwise_docs(docs: DataFrame) -> DataFrame:
+    """Append a 13-token phrase unique to each (2p, 2p+1) doc pair — so
+    shared runs exist ONLY within the pair (no hot gram buckets) — and
+    REPLACE every doc_id % 10 == 4 doc by its bare phrase (that doc is
+    then fully covered by its partner: the containment case). Mirrored by
+    _PAIRWISE_SQL."""
+    did = F.col("doc_id")
+    p = F.expr("CAST((doc_id - doc_id % 2) / 2 AS BIGINT)")
+    # pair id sits MID-phrase so no 8-gram is common across different
+    # pairs (prefix 5 tokens, suffix 7 tokens — both under k)
+    phrase = F.concat(
+        F.lit("shared passage q w e "), p.cast("string"), F.lit(" r t y u i o p")
+    )
+    t2 = F.when(did % 10 == 4, phrase).otherwise(
+        F.concat(F.col("text"), F.lit(" "), phrase)
+    )
+    return docs.select("doc_id", t2.alias("text"))
+
+
+_PAIRWISE_SQL = """
+SELECT doc_id,
+       CASE WHEN doc_id % 10 = 4
+            THEN 'shared passage q w e ' || CAST(CAST((doc_id - doc_id % 2) / 2 AS BIGINT) AS VARCHAR)
+                 || ' r t y u i o p'
+            ELSE text || ' shared passage q w e '
+                 || CAST(CAST((doc_id - doc_id % 2) / 2 AS BIGINT) AS VARCHAR)
+                 || ' r t y u i o p' END AS text
+FROM documents
+"""
+
+
+def q_doc_containment(spark, sf_dir):
+    """Near-subset detection (Broder containment axis): per near-dup pair,
+    the fraction of each doc covered by shared >= 10-token runs; either
+    side >= 0.5 flags containment. Pairs planted one-per-(2p, 2p+1) so
+    every gram bucket holds exactly its pair's occurrences (no quadratic
+    hot buckets); doc_id % 10 == 4 docs are bare phrases — fully contained
+    in their partner."""
+    return DD.doc_containment(
+        _pairwise_docs(_t(spark, sf_dir, "documents")), k=8, min_len=10
+    )
