@@ -108,8 +108,9 @@ def euclidean_distance(cells: DataFrame, grid: GridSpec, index) -> DataFrame:
     distance from every valid cell center to the nearest non-background
     cell center (sources are 0). The reference's two-pass Shih&Wu
     transform is exact, so nearest-source search gives identical values;
-    here it is the engine's exact kNN join (geometric annulus expansion —
-    one broadcast-able candidate join per ring, never all-pairs).
+    here it is the engine's exact kNN join (one candidate join over the
+    neighbour cells a per-cell occupancy count proves sufficient, never
+    all-pairs).
     -> (row, col, value)."""
     from whitebox_tools_spark.operators.knn import knn_join
 

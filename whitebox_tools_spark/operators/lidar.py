@@ -369,7 +369,7 @@ def height_above_ground(
     """HeightAboveGround (lidar_analysis/height_above_ground.rs:250-270)
     and the normalize_lidar plugin: replace each point's z with its height
     above the NEAREST ground-classified point (2D nearest, kd-tree in the
-    reference; the exact annulus-expansion kNN join here — same result,
+    reference; the exact kNN join here — same result,
     ties to the lowest point id). Raises if no ground points exist, like
     the reference. -> (point_id, x, y, z, classification) with z = HAG."""
     from whitebox_tools_spark.operators.knn import knn_join

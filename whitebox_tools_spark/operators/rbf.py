@@ -18,10 +18,12 @@ the same per-cell scheme:
      data midpoint (rs:480-481,588: |z - mid| < (2*range)*5), else nodata.
 
 Spark-first shape: the neighbor search is the SAME distributed machinery
-as IDW/NN gridding (annulus cell-cover equi-joins + exact kNN fallback —
-knn.py; no quadratic pairing, no driver loops over cells), and the dense
-per-cell solve (n ~ min_points..tens, so an n x n system of order tens)
-runs as an Arrow-batched numpy kernel over collected neighbor lists.
+as IDW gridding (knn._grid_neighbours: one cell-cover equi-join whose reach
+comes from a per-cell occupancy count, then one window that picks the
+radius set or the min_points nearest; no quadratic pairing, no driver
+loops over cells), and the dense per-cell solve (n ~ min_points..tens, so
+an n x n system of order tens) runs as an Arrow-batched numpy kernel over
+collected neighbor lists.
 Neighbors are ordered deterministically by (dist_sq, point_id) before the
 solve so the output is partitioning-invariant; the reference's kd-tree
 return order is arbitrary, and the solved surface is order-independent in
@@ -42,16 +44,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..distributed import loop_checkpoint
 from ..grid import CellIndex, GridSpec
-from .knn import (
-    _annulus_offsets,
-    _candidates,
-    _grid_targets,
-    _prep_points,
-    _with_cells,
-    knn_join,
-)
+from .knn import _grid_neighbours
 
 _BASES = (
     "thin_plate_spline",
@@ -138,78 +132,6 @@ def rbf_solve_eval(
     return float(deltas @ phi)
 
 
-def _gather_neighbors(
-    points: DataFrame,
-    grid: GridSpec,
-    index: CellIndex,
-    *,
-    radius: float,
-    min_points: int,
-    point_id: str,
-    px: str,
-    py: str,
-    z: str,
-) -> tuple[DataFrame, DataFrame]:
-    """(targets, cand): cand = (target_id, tx, ty, point_id, px, py, z,
-    dist_sq) under the reference's radius-then-kNN-fallback rule — the
-    exact gather idw_gridding uses (knn.py:291-339), with the neighbor
-    coordinates re-joined for the solver."""
-    spark = points.sparkSession
-    targets = _grid_targets(spark, grid)
-    p = _prep_points(points, index, point_id, px, py, z)
-    coords = points.select(
-        F.col(point_id).alias("point_id"),
-        F.col(px).alias("px"),
-        F.col(py).alias("py"),
-    )
-
-    cand = None
-    under = targets
-    if radius > 0.0:
-        reach = int(math.floor(radius / index.cell_size)) + 1
-        t = _with_cells(
-            targets.select("target_id", F.col("x").alias("tx"), F.col("y").alias("ty")),
-            index,
-            "tx",
-            "ty",
-        )
-        offsets = _annulus_offsets(spark, -1, reach)
-        cand = (
-            _candidates(t, p, index, offsets)
-            .filter(F.col("dist_sq") <= F.lit(radius * radius))
-            .select("target_id", "tx", "ty", "point_id", "z", "dist_sq")
-        )
-        counts = cand.groupBy("target_id").agg(F.count(F.lit(1)).alias("__n"))
-        satisfied = counts.filter(F.col("__n") >= min_points).select("target_id")
-        cand = cand.join(F.broadcast(satisfied), "target_id").transform(loop_checkpoint)
-        under = targets.join(
-            F.broadcast(satisfied), "target_id", "left_anti"
-        ).transform(loop_checkpoint)
-
-    if min_points > 0 and not under.isEmpty():
-        knn = (
-            knn_join(
-                under,
-                points,
-                min_points,
-                index,
-                target_id="target_id",
-                tx="x",
-                ty="y",
-                point_id=point_id,
-                px=px,
-                py=py,
-                z=z,
-            )
-            .join(under.select("target_id", F.col("x").alias("tx"), F.col("y").alias("ty")), "target_id")
-            .select("target_id", "tx", "ty", "point_id", "z", "dist_sq")
-        )
-        cand = knn if cand is None else cand.unionByName(knn)
-    if cand is None:
-        raise ValueError("need radius > 0 or min_points > 0")
-    return targets, cand.join(coords, "point_id")
-
-
 def rbf_interpolation(
     points: DataFrame,
     grid: GridSpec,
@@ -229,7 +151,7 @@ def rbf_interpolation(
     where the range gate rejects the estimate (rs:588-591)."""
     if func_type not in _BASES:
         raise ValueError(f"unknown basis {func_type!r}")
-    targets, cand = _gather_neighbors(
+    targets, cand = _grid_neighbours(
         points,
         grid,
         index,

@@ -1900,7 +1900,7 @@ def elevation_above_stream_euclidean(
 ) -> DataFrame:
     """ElevationAboveStreamEuclidean (hydro_analysis/
     elevation_above_stream_euclidean.rs): z minus the elevation of the
-    EUCLIDEAN-nearest stream cell (exact kNN annulus join).
+    EUCLIDEAN-nearest stream cell (exact kNN join).
     -> (row, col, value)."""
     from whitebox_tools_spark.operators.knn import knn_join
 

@@ -1832,7 +1832,7 @@ FROM centers c SEMI JOIN inside i ON c.point_id = i.point_id
 
 def q_lidar_idw_interpolation(spark, sf_dir):
     """LidarIdwInterpolation (lidar_analysis/lidar_idw_interpolation.rs):
-    the engine's IDW gridding over the point cloud's z (same annulus-kNN
+    the engine's IDW gridding over the point cloud's z (same kNN
     machinery as IdwInterpolation, lidar-sourced fixture)."""
     cloud = _order_cloud(spark, sf_dir).filter(F.col("point_id") % 5 == 0)
     out = idw_gridding(cloud, NN_GRID, IDX, weight=2.0, radius=100.0, min_points=4)
@@ -2994,7 +2994,7 @@ def q_horizon_angle(spark, sf_dir):
 
 def q_euclidean_distance(spark, sf_dir):
     """EuclideanDistance (gis_analysis/euclidean_distance.rs): exact
-    nearest-source map-unit distance via the kNN annulus join."""
+    nearest-source map-unit distance via the exact kNN join."""
     from whitebox_tools_spark.operators.buffer import euclidean_distance
 
     src = _part_raster(spark, sf_dir).withColumn(
