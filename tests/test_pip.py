@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from whitebox_tools_spark import geometry as G, synth
 from whitebox_tools_spark.grid import CellIndex
-from whitebox_tools_spark.operators.pip import points_in_polygons
+from whitebox_tools_spark.operators.pip import clip_points, erase_points, points_in_polygons
 
 IDX = CellIndex(0.0, 0.0, 1000.0, 5)
 
@@ -17,13 +17,15 @@ def polys():
     return synth.make_polygons()
 
 
+def _reference_hits(keys, px, py, polys_parts):
+    """Sorted (point_id, poly_id) containment pairs from geometry.point_in_parts."""
+    return sorted(
+        (int(k), pid) for pid, parts in polys_parts for k in keys[G.point_in_parts(px, py, parts)]
+    )
+
+
 def _numpy_oracle(keys, polys):
-    px, py = synth.point_np(keys)
-    out = []
-    for pid, parts in synth.polygons_as_parts(polys):
-        keep = G.point_in_parts(px, py, parts)
-        out += [(int(k), pid) for k in keys[keep]]
-    return sorted(out)
+    return _reference_hits(keys, *synth.point_np(keys), synth.polygons_as_parts(polys))
 
 
 def test_pip_matches_numpy_and_duckdb(spark, sf_dir, polys):
@@ -104,7 +106,7 @@ def test_pip_cover_is_local_relation(spark, sf_dir, polys):
     assert "ExistingRDD" not in plan
 
 
-def test_pip_expr_matches_pandas(spark, sf_dir, polys):
+def test_pip_edge_midpoints_match_numpy(spark, sf_dir, polys):
     # customer points plus the midpoint of every shell and hole edge
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     x, y = synth.point_exprs(F.col("c_custkey"))
@@ -122,11 +124,43 @@ def test_pip_expr_matches_pandas(spark, sf_dir, polys):
     edge_pts = spark.createDataFrame(rows, "point_id long, x double, y double")
     pts = pts.unionByName(edge_pts)
     parts = synth.polygons_as_parts(polys)
-    expr = sorted(tuple(r) for r in points_in_polygons(pts, parts, IDX).collect())
-    pandas = sorted(
-        tuple(r) for r in points_in_polygons(pts, parts, IDX, method="pandas").collect()
-    )
-    assert expr == pandas
+    got = sorted(tuple(r) for r in points_in_polygons(pts, parts, IDX).collect())
+    ids, px, py = (np.array(c) for c in zip(*pts.collect()))
+    assert got == _reference_hits(ids, px, py, parts)
     # the edge midpoints reach the refine and are not all decided one way
-    n_edge_hits = sum(pid < 0 for pid, _ in expr)
+    n_edge_hits = sum(pid < 0 for pid, _ in got)
     assert 0 < n_edge_hits < len(rows)
+
+
+# Two squares reaching past the world [0, 1000)^2: one over the east edge,
+# one under the south edge (the cover clamps them into the border cells).
+_EDGE_SQUARES = [
+    (1, [(np.array([990.0, 1010.0, 1010.0, 990.0, 990.0]),
+          np.array([500.0, 500.0, 520.0, 520.0, 500.0]), False)]),
+    (2, [(np.array([10.0, 30.0, 30.0, 10.0, 10.0]),
+          np.array([-20.0, -20.0, -5.0, -5.0, -20.0]), False)]),
+]
+_EDGE_POINTS = [
+    (1, 1005.0, 505.0),   # east of the world, inside square 1
+    (2, 20.0, -10.0),     # south of the world, inside square 2
+    (3, 995.0, 510.0),    # in the world, inside square 1
+    (4, 1020.0, 505.0),   # east of the world, outside both
+    (5, 20.0, -30.0),     # south of the world, outside both
+    (6, -5000.0, 510.0),  # far west, in the row of square 1
+    (7, 500.0, 500.0),    # in the world, outside both
+]
+
+
+def test_pip_points_outside_world(spark):
+    pts = spark.createDataFrame(_EDGE_POINTS, "point_id long, x double, y double")
+    ids, px, py = (np.array(c) for c in zip(*_EDGE_POINTS))
+    expect = _reference_hits(ids, px, py, _EDGE_SQUARES)
+    assert expect == [(1, 1), (2, 2), (3, 1)]
+
+    got = sorted(tuple(r) for r in points_in_polygons(pts, _EDGE_SQUARES, IDX).collect())
+    assert got == expect
+    inside = {k for k, _ in expect}
+    clipped = sorted(r.point_id for r in clip_points(pts, _EDGE_SQUARES, IDX).collect())
+    assert clipped == sorted(inside)
+    erased = sorted(r.point_id for r in erase_points(pts, _EDGE_SQUARES, IDX).collect())
+    assert erased == sorted(set(ids.tolist()) - inside)

@@ -1,7 +1,8 @@
-"""c4_quality_filter / dedup_lines / pii_redact / dsir_importance: every
-metric must equal an independent pure-python recomputation on handcrafted
-docs that exercise each rule, plus partition-invariance pins for the two
-aggregate-bearing ops (line dedup, DSIR)."""
+"""c4_quality_filter / pii_redact / dsir_importance / gopher_repetition /
+language_id_multi: every metric must equal an independent pure-python
+recomputation on handcrafted docs that exercise each rule, plus a
+partition-invariance pins for the aggregate-bearing ops (DSIR, Gopher
+repetition)."""
 
 import hashlib
 import math
@@ -84,52 +85,6 @@ def test_c4_rules_vs_python(spark):
     assert out[4]["has_lorem"] == 1 and out[4]["keep_doc"] == 0
     assert out[5]["has_brace"] == 1 and out[5]["keep_doc"] == 0
     assert out[6]["n_kept_lines"] == 0
-
-
-# ---------------------------------------------------------------------------
-# corpus-level line dedup
-# ---------------------------------------------------------------------------
-_LD_DOCS = [
-    (1, "unique alpha\ncopyright footer\nunique beta"),
-    (2, "copyright footer\nunique gamma\n\nunique delta"),
-    (3, "unique epsilon\ncopyright footer"),
-    (4, "copyright footer"),  # every line removed -> cleaned == ''
-    (5, "\n\nunique zeta"),  # blank lines repeat but are never boilerplate
-]
-
-
-def _py_line_dedup(docs, min_count=2):
-    cnt = Counter()
-    for _, text in docs:
-        for ln in text.split("\n"):
-            if ln.strip():
-                cnt[ln.strip()] += 1
-    boiler = {k for k, c in cnt.items() if c >= min_count}
-    out = {}
-    for did, text in docs:
-        lines = text.split("\n")
-        kept = [ln for ln in lines if ln.strip() not in boiler or not ln.strip()]
-        out[did] = {
-            "n_lines": len(lines),
-            "n_removed": len(lines) - len(kept),
-            "cleaned": "\n".join(kept),
-        }
-    return out
-
-
-def test_line_dedup_vs_python_and_partition_invariance(spark):
-    from whitebox_tools_spark.operators.dedup import dedup_lines
-
-    exp = _py_line_dedup(_LD_DOCS)
-    for parts in (1, 7):
-        df = spark.createDataFrame(_LD_DOCS, ["doc_id", "text"]).repartition(parts)
-        got = {r["doc_id"]: r.asDict() for r in dedup_lines(df).collect()}
-        assert set(got) == set(exp)
-        for did in exp:
-            sub = {k: got[did][k] for k in exp[did]}
-            assert sub == exp[did], f"parts={parts} doc {did}: {sub} != {exp[did]}"
-    assert exp[4]["cleaned"] == "" and exp[4]["n_removed"] == 1
-    assert exp[5]["n_removed"] == 0  # blanks survive
 
 
 # ---------------------------------------------------------------------------
@@ -329,75 +284,6 @@ def test_gopher_repetition_vs_python(spark):
 
 
 # ---------------------------------------------------------------------------
-# exact-substring dedup removal
-# ---------------------------------------------------------------------------
-def _py_remove_spans(docs, k=4, min_count=2):
-    occ = []  # (doc, pos0, gram)
-    toksd = {}
-    for did, text in docs:
-        toks = text.split(" ")
-        toksd[did] = toks
-        for i in range(len(toks) - k + 1):
-            occ.append((did, i, " ".join(toks[i:i + k])))
-    cnt = Counter(g for _, _, g in occ)
-    canon = {}
-    for did, i, g in sorted(occ):
-        if cnt[g] >= min_count and g not in canon:
-            canon[g] = (did, i)
-    covered = {did: set() for did, _ in docs}
-    for did, i, g in occ:
-        if cnt[g] >= min_count and canon[g] != (did, i):
-            covered[did].update(range(i, i + k))
-    out = {}
-    for did, _ in docs:
-        toks = toksd[did]
-        kept = [w for j, w in enumerate(toks) if j not in covered[did]]
-        out[did] = {
-            "n_tokens": len(toks),
-            "n_removed": len(toks) - len(kept),
-            "cleaned": " ".join(kept),
-        }
-    return out
-
-
-_RS_DOCS = [
-    # docs 1 and 2 share a verbatim 6-token run (3 full 4-grams)
-    (1, "alpha beta shared run of six tokens here tail one"),
-    (2, "intro words shared run of six tokens here other ending"),
-    # doc 3 repeats its own leading 4 tokens at the tail
-    (3, "aa bb cc dd middle part aa bb cc dd"),
-    # doc 4: nothing repeated
-    (4, "totally unique text with no repeats at all"),
-    # doc 5: three-way share with 1 and 2 -> still only one canonical
-    (5, "zz shared run of six tokens here yy"),
-]
-
-
-def test_remove_duplicate_spans_vs_python(spark):
-    from whitebox_tools_spark.operators.dedup import remove_duplicate_spans
-
-    exp = _py_remove_spans(_RS_DOCS, k=4)
-    df = spark.createDataFrame(_RS_DOCS, ["doc_id", "text"])
-    for parts in (1, 5):
-        got = {
-            r["doc_id"]: r.asDict()
-            for r in remove_duplicate_spans(df.repartition(parts), k=4).collect()
-        }
-        assert set(got) == set(exp)
-        for did in exp:
-            sub = {kk: got[did][kk] for kk in exp[did]}
-            assert sub == exp[did], (parts, did, sub, exp[did])
-    # canonical occurrence (doc 1, smallest (doc,pos)) keeps the run
-    assert "shared run of six tokens here" in exp[1]["cleaned"]
-    assert "shared run of six tokens here" not in exp[2]["cleaned"]
-    assert "shared run of six tokens here" not in exp[5]["cleaned"]
-    # within-doc repeat: the leading occurrence survives, the tail is cut
-    assert exp[3]["cleaned"].startswith("aa bb cc dd")
-    assert exp[3]["n_removed"] == 4
-    assert exp[4]["n_removed"] == 0
-
-
-# ---------------------------------------------------------------------------
 # multi-language ID
 # ---------------------------------------------------------------------------
 def test_language_id_multi_vs_python(spark):
@@ -438,58 +324,3 @@ def test_language_id_multi_vs_python(spark):
         "en", "fr", "de", "es", "unknown", "unknown",
     ]
     assert out[7]["pred_lang"] == "es"  # tie breaks alphabetically: es < fr
-
-
-# ---------------------------------------------------------------------------
-# deterministic split + containment
-# ---------------------------------------------------------------------------
-def test_train_val_test_split_deterministic_and_stable(spark):
-    from whitebox_tools_spark.operators.dedup import train_val_test_split
-
-    docs = spark.createDataFrame([(i,) for i in range(2000)], ["doc_id"])
-    out = {r["doc_id"]: r.asDict() for r in train_val_test_split(docs).collect()}
-    # python replay of the portable hash
-    for did in (0, 1, 17, 1999):
-        u = int(hashlib.md5(f"13:{did}".encode()).hexdigest()[:15], 16) / float(1 << 60)
-        assert out[did]["u"] == pytest.approx(round(u, 9), abs=1e-12)
-        exp = "test" if u < 0.05 else ("val" if u < 0.10 else "train")
-        assert out[did]["split"] == exp, did
-    # growing the corpus never reassigns existing docs
-    grown = {
-        r["doc_id"]: r["split"]
-        for r in train_val_test_split(
-            spark.createDataFrame([(i,) for i in range(4000)], ["doc_id"])
-        ).collect()
-    }
-    assert all(grown[d] == out[d]["split"] for d in out)
-    # bands are roughly sized (hash uniformity)
-    from collections import Counter as C
-    c = C(v["split"] for v in out.values())
-    assert 40 <= c["test"] <= 160 and 40 <= c["val"] <= 160
-
-
-def test_doc_containment_flags_near_subsets(spark):
-    from whitebox_tools_spark.operators.dedup import doc_containment
-
-    filler_a = " ".join(f"fa{i}" for i in range(30))
-    filler_b = " ".join(f"fb{i}" for i in range(30))
-    shared = "s1 s2 s3 s4 s5 s6 s7 s8 s9 s10 s11 s12"
-    docs = [
-        (1, f"{filler_a} {shared}"),       # long doc containing the passage
-        (2, shared),                        # bare passage -> contained in 1
-        (3, f"{filler_b} {shared}"),       # another long doc sharing it
-        (4, "x1 x2 x3 x4 x5 x6 x7 x8 x9"),  # unrelated
-    ]
-    out = {
-        (r.doc_id_a, r.doc_id_b): r.asDict()
-        for r in doc_containment(
-            spark.createDataFrame(docs, ["doc_id", "text"]), k=4, min_len=10
-        ).collect()
-    }
-    assert set(out) == {(1, 2), (1, 3), (2, 3)}
-    # doc 2 (12 tokens, all shared) is contained in both partners
-    assert out[(1, 2)]["cov_b"] == 1.0 and out[(1, 2)]["contained"] == 1
-    assert out[(2, 3)]["cov_a"] == 1.0 and out[(2, 3)]["contained"] == 1
-    # two long docs share only 12/42 tokens -> not containment
-    assert out[(1, 3)]["contained"] == 0
-    assert out[(1, 3)]["cov_a"] == pytest.approx(round(12 / 42, 6))

@@ -3,15 +3,14 @@
 Re-answers the analyses of the reference geoprocessing toolkit (WhiteboxTools
 v2.3.0, studied read-only at /root/reference) as distributed DataFrame
 pipelines: point-in-polygon overlay, kNN/IDW gridding, zonal statistics,
-raster<->vector conversion, deterministic tiling — plus the large-scale
-training-data operators (dedup, text analysis) a 100 TB
-document pipeline needs.
+raster<->vector conversion, deterministic tiling — plus the text-analysis
+and cleaning operators left from an earlier training-data suite.
 
 Architecture (NOT a port):
   - data model: long-form cell tables / typed geometry structs / flat point
     tables (SURVEY.md section 1), all columnar Arrow.
   - spatial joins: floor-grid / quadtree cell-cover broadcast joins + exact
-    numpy winding-number refinement inside pandas UDFs.
+    winding-number refinement as one SQL higher-order expression (JVM only).
   - everything declarative: built-in pyspark.sql.functions wherever possible,
     vectorized Arrow UDFs only for geometry kernels; no per-row Python.
 """

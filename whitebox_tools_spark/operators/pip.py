@@ -15,24 +15,21 @@ Spark plan (designed for 10^12 points x broadcastable polygon set):
      The rows are one Arrow table, so the cover is a local relation
      (LocalTableScan with exact size stats): no job unpickles Python rows
      before the join can start.
-  2. points get cell_id as a pure column expression (whole-stage codegen).
+  2. points get cell_id as a pure column expression (whole-stage codegen),
+     with ix/iy clamped into [0, n-1] as the cover is: a point outside the
+     world lands in the border cell next to it, so a polygon that reaches
+     past the world edge still meets it; steps 4-5 keep the result exact.
   3. broadcast hash join points.cell_id == cover.cell_id — no shuffle of the
      big side, ever.
   4. bbox filter as a column expression (cheap rejection).
-  5. exact winding-number refinement:
-       method="expr" (default): one SQL `aggregate` over the polygon's
-         parts, each part an inner `aggregate` over its broadcast edge
-         array — JVM only, no Python and no shuffle. The higher-order
-         functions are CodegenFallback in Spark 4.1, so the refine is
-         interpreted per candidate row inside an otherwise whole-stage
-         codegen'd stage. (Benchmarked: the Arrow/Python exchange was the
-         scalability ceiling on many-core executors; the expression path
-         removed it.)
-       method="pandas": vectorized numpy kernel in mapInPandas — for
-         polygon sets with very large vertex counts where a per-row edge
-         loop loses to Arrow batch transfer.
+  5. exact winding-number refinement: one SQL `aggregate` over the
+     polygon's parts, each part an inner `aggregate` over its broadcast edge
+     array — JVM only, no Python and no shuffle. The higher-order functions
+     are CodegenFallback in Spark 4.1, so the refine is interpreted per
+     candidate row inside an otherwise whole-stage codegen'd stage.
+     (Benchmarked: an Arrow/Python exchange was the scalability ceiling on
+     many-core executors; the expression path removed it.)
 
-Both methods implement the identical crossing rules; tests pin equality.
 For polygon sets too large to broadcast, pass broadcast=False to shuffle on
 cell_id instead (both sides partitioned by cell — co-located sort-merge
 equi-join, forced by a hint since the cover's exact size would otherwise
@@ -41,15 +38,11 @@ let Catalyst broadcast it).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark import geometry as G
 from whitebox_tools_spark.grid import CellIndex
 
 _EDGE = pa.struct([(c, pa.float64()) for c in ("x0", "y0", "x1", "y1")])
@@ -125,7 +118,6 @@ def points_in_polygons(
     y: str = "y",
     broadcast: bool = True,
     carry_cols: list[str] | None = None,
-    method: str = "expr",
 ) -> DataFrame:
     """Containment join -> DataFrame(point_id, poly_id[, carry_cols...]).
 
@@ -134,8 +126,7 @@ def points_in_polygons(
     join and refine untouched (e.g. a precomputed tile id; also what keeps
     streaming plans single-stream — no self-join to re-attach attributes).
     """
-    use_pandas = method == "pandas"
-    cover = polygon_cover(points.sparkSession, polys_parts, index, geometry=not use_pandas)
+    cover = polygon_cover(points.sparkSession, polys_parts, index, geometry=True)
     cover = F.broadcast(cover) if broadcast else cover.hint("merge")
 
     carry = carry_cols or []
@@ -147,43 +138,15 @@ def points_in_polygons(
     )
     # expressions as SQL text: one py4j call each instead of one per
     # Column operator (hundreds per query), with the same analyzed plan
-    cell_id = index.cell_id_sql(index.ix_sql("x"), index.iy_sql("y"))
+    # ix/iy clamped into the world, as cover_bbox clamps the cover (a NULL
+    # coordinate clamps to a cell too, and then fails the bbox filter)
+    hi = index.n - 1
+    ix = f"LEAST(GREATEST({index.ix_sql('x')}, 0), {hi})"
+    iy = f"LEAST(GREATEST({index.iy_sql('y')}, 0), {hi})"
+    cell_id = index.cell_id_sql(ix, iy)
     cand = pts.select("*", F.expr(cell_id).alias("cell_id")).join(cover, "cell_id")
     in_bbox = "x >= xmin AND x <= xmax AND y >= ymin AND y <= ymax"
-    if use_pandas:
-        carry_schema = "".join(f", {c} {dict(points.dtypes)[c]}" for c in carry)
-        return _refine_pandas(
-            cand.filter(in_bbox).select("point_id", "x", "y", "poly_id", *carry),
-            polys_parts, carry, "point_id long, poly_id long" + carry_schema,
-        )
     return cand.filter(f"{in_bbox} AND {_KEEP}").select("point_id", "poly_id", *carry)
-
-
-def _refine_pandas(cand: DataFrame, polys_parts: list, carry: list[str], schema: str) -> DataFrame:
-    """Arrow/numpy refine path (see module docstring)."""
-    # broadcast the polygon geometry once per executor (not per task)
-    bc = cand.sparkSession.sparkContext.broadcast(
-        {pid: [(np.asarray(xs), np.asarray(ys), bool(h)) for xs, ys, h in parts]
-         for pid, parts in polys_parts}
-    )
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lookup = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep_frames = []
-            out_cols = ["point_id", "poly_id"] + carry
-            for pid, grp in pdf.groupby("poly_id", sort=False):
-                keep = G.point_in_parts(
-                    grp["x"].to_numpy(), grp["y"].to_numpy(), lookup[int(pid)]
-                )
-                if keep.any():
-                    keep_frames.append(grp.loc[keep, out_cols])
-            if keep_frames:
-                yield pd.concat(keep_frames, ignore_index=True)
-
-    return cand.mapInPandas(refine, schema=schema)
 
 
 def clip_points(

@@ -28,7 +28,6 @@ from whitebox_tools_spark.grid import CellIndex, GridSpec, lidar_tile_exprs, lid
 from whitebox_tools_spark.operators import raster_math as RM
 from whitebox_tools_spark.operators import stats as ST
 from whitebox_tools_spark.operators import text as TX
-from whitebox_tools_spark.operators import dedup as DD
 from whitebox_tools_spark.operators.extract import extract_raster_values_at_points
 from whitebox_tools_spark.operators.knn import idw_gridding, nearest_neighbour_gridding
 from whitebox_tools_spark.operators.pip import points_in_polygons

@@ -37,8 +37,6 @@ _DRIVER_WINDOW: list[str] = [
     "qin_flow_accumulation",
     "shapefile_round_trip",
     "las_rgb_gps_round_trip",
-    "train_val_test_split",
-    "doc_containment",
     "las_to_zlidar",
     "zlidar_to_las",
     "map_ops_all",
@@ -48,22 +46,13 @@ _DRIVER_WINDOW: list[str] = [
     "trend_surface_vector_points",
     "boundary_shape_complexity",
     "embankment_mapping",
-    "minhash_dedup_components",
     "c4_rules",
-    "line_dedup",
     "pii_redaction",
     "dsir_importance",
     "gopher_repetition",
-    "pack_sequences",
     "unigram_logprob_quality",
-    "curation_pipeline",
     "gopher_rules",
-    "token_budget_sample",
-    "duplicate_text_spans",
-    "contamination_check",
-    "stratified_sample",
     "embankment_removal",
-    "remove_duplicate_spans",
     "language_id_multi",
     "lidar_ransac_planes",
     "lidar_segmentation",
@@ -518,30 +507,14 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lidar_filter_classes": q_lidar_filter_classes,
         "lidar_block_minimum": q_lidar_block_minimum,
         "lidar_block_maximum": q_lidar_block_maximum,
-        "dedup_exact": q_dedup_exact,
-        "ngram_jaccard": q_ngram_jaccard,
-        "ngram_jaccard_prefix": q_ngram_jaccard_prefix,
-        "duplicate_text_spans": q_duplicate_text_spans,
-        "contamination_check": q_contamination_check,
-        "stratified_sample": q_stratified_sample,
-        "minhash_lsh": q_minhash_lsh,
-        "minhash_dedup_components": q_minhash_components,
-        "curation_pipeline": q_curation_pipeline,
-        "simhash_near_dup": q_simhash,
         "token_count": q_token_count,
         "bpe_token_count": q_bpe_count,
         "quality_score": q_quality,
         "gopher_rules": q_gopher_rules,
-        "token_budget_sample": q_token_budget_sample,
         "unigram_logprob_quality": q_unigram_logprob,
-        "pack_sequences": q_pack_sequences,
         "c4_rules": q_c4_rules,
         "gopher_repetition": q_gopher_repetition,
-        "remove_duplicate_spans": q_remove_duplicate_spans,
         "language_id_multi": q_language_id_multi,
-        "train_val_test_split": q_train_val_test_split,
-        "doc_containment": q_doc_containment,
-        "line_dedup": q_line_dedup,
         "pii_redaction": q_pii_redaction,
         "dsir_importance": q_dsir_importance,
         "language_id": q_langid,
@@ -1643,26 +1616,6 @@ FROM ({_cloud_ext_cte()}) t WHERE abs(scan_angle) <= 10.0
         "kmeans_clustering": _kmeans_sql(),
         "modified_kmeans_clustering": _modified_kmeans_sql(),
         "pca": _pca_values_sql(),
-        "dedup_exact": """
-SELECT min(doc_id) AS doc_id, text, count(*) AS n_dups FROM documents GROUP BY text
-""",
-        "ngram_jaccard": _ngram_jaccard_sql(),
-        "ngram_jaccard_prefix": _ngram_jaccard_sql(),
-        "duplicate_text_spans": DD.duplicate_text_spans_oracle_sql(
-            "documents", k=8, min_len=10
-        ),
-        "contamination_check": DD.contamination_check_oracle_sql(
-            "SELECT * FROM documents WHERE doc_id % 10 != 0",
-            "SELECT * FROM documents WHERE doc_id % 10 = 0",
-            k=8,
-        ),
-        "stratified_sample": (
-            "SELECT doc_id, source, lang, n_chars FROM ("
-            + DD.stratified_sample_oracle_sql(
-                "SELECT * FROM documents", _MIX, seed=7, default=0.1
-            )
-            + ")"
-        ),
         "token_count": """
 SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN 0
                     ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens
@@ -1675,58 +1628,13 @@ FROM documents
         "quality_score": _quality_sql(),
         "gopher_rules": _gopher_rules_sql(min_words=30, min_stop_hits=1),
         "unigram_logprob_quality": TX.unigram_logprob_quality_oracle_sql(),
-        "pack_sequences": DD.pack_sequences_oracle_sql(
-            "SELECT * FROM documents", 512
-        ),
         "c4_rules": TX.c4_rules_oracle_sql(_LINED_SQL),
         "gopher_repetition": TX.gopher_repetition_oracle_sql(_PAGED_SQL),
-        "remove_duplicate_spans": DD.remove_duplicate_spans_oracle_sql(_SLOGAN_SQL, k=8),
         "language_id_multi": TX.language_id_multi_oracle_sql(_MULTILANG_SQL),
-        "train_val_test_split": DD.train_val_test_split_oracle_sql(),
-        "doc_containment": DD.doc_containment_oracle_sql("(" + _PAIRWISE_SQL + ")", k=8, min_len=10),
-        "line_dedup": DD.dedup_lines_oracle_sql(_LINED_SQL),
         "pii_redaction": TX.pii_redact_oracle_sql(_PII_SQL),
         "dsir_importance": TX.dsir_importance_oracle_sql(),
-        "token_budget_sample": (
-            "SELECT doc_id, source, n_tokens FROM ("
-            + DD.token_budget_sample_oracle_sql(
-                "SELECT * FROM documents", _TOKEN_BUDGETS, default=700
-            )
-            + ") t"
-        ),
         "language_id": _langid_sql(),
         "fingerprint": _fingerprint_sql(),
-        "minhash_lsh": DD.minhash_lsh_oracle_sql(
-            "SELECT doc_id, text FROM documents",
-            num_hashes=32, bands=8, verify_threshold=0.7,
-        ),
-        "minhash_dedup_components": DD.near_dup_components_oracle_sql(
-            DD.minhash_lsh_oracle_sql(
-                "SELECT doc_id, text FROM documents",
-                num_hashes=32, bands=8, verify_threshold=0.7,
-            )
-        ),
-        "curation_pipeline": (
-            "WITH g AS ("
-            + _gopher_rules_sql(min_words=30, min_stop_hits=1)
-            + "), kept AS (SELECT d.* FROM documents d JOIN g "
-            "ON d.doc_id = g.doc_id AND g.passes = 1), "
-            "canon AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY text), "
-            "dd AS (SELECT k.* FROM kept k JOIN canon USING (doc_id)), "
-            "samp AS ("
-            + DD.stratified_sample_oracle_sql(
-                "SELECT * FROM dd", _CURATION_FRACTIONS, default=0.5, seed=13
-            )
-            + ") SELECT source, count(*) AS n_docs, "
-            "sum(CASE WHEN length(trim(text)) = 0 THEN 0 "
-            "ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) AS n_tokens "
-            "FROM samp GROUP BY source"
-        ),
-        "simhash_near_dup": "SELECT doc_id_a, doc_id_b, hamming::BIGINT AS hamming FROM ("
-        + DD.simhash_near_dup_oracle_sql(
-            "SELECT doc_id, text FROM documents", max_hamming=6, bits=60
-        )
-        + ")",
         "clip_lines": _ovl.clip_lines_oracle_sql(_cust_segs_cte(), PARTS, erase=False),
         "erase_lines": _ovl.clip_lines_oracle_sql(_cust_segs_cte(), PARTS, erase=True),
         "polygon_overlay": _ovl.overlay_oracle_sql(PARTS_A, PARTS),

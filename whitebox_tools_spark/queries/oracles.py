@@ -1953,28 +1953,6 @@ FROM feat
 """
 
 
-def _ngram_jaccard_sql() -> str:
-    return """
-WITH d AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(length(text) - 2, 1)),
-           i -> substr(text, CAST(i AS INTEGER), 3))) AS sh
-  FROM documents
-),
-pairs AS (
-  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, a.sh AS sa, b.sh AS sb
-  FROM d a CROSS JOIN d b WHERE a.doc_id < b.doc_id
-)
-SELECT doc_id_a, doc_id_b,
-       round(CAST(len(list_intersect(sa, sb)) AS DOUBLE)
-             / len(list_distinct(list_concat(sa, sb))), 6) AS jaccard
-FROM pairs
-WHERE CAST(len(list_intersect(sa, sb)) AS DOUBLE)
-      / len(list_distinct(list_concat(sa, sb))) >= 0.5
-"""
-
-
 _STOP_SQL = "(" + ",".join(f"'{w}'" for w in TX.EN_STOPWORDS) + ")"
 
 

@@ -2199,147 +2199,6 @@ FROM inr i LEFT JOIN knn k ON k.pid = i.pid
 """
 
 
-def q_dedup_exact(spark, sf_dir):
-    return DD.exact_dedup(_t(spark, sf_dir, "documents"))
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    # banded: log-ratio length bands, 3x key fan-out; exact-complete, so
-    # the all-pairs DuckDB oracle certifies it directly. Candidate volume
-    # is sum(|band|^2) — mid-scale path; 100-TB traffic goes to 'prefix'.
-    return _r6(
-        DD.ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents"), threshold=0.5, banded=True
-        ),
-        ["jaccard"],
-    )
-
-
-def q_ngram_jaccard_prefix(spark, sf_dir):
-    """PPJoin prefix-filtered exact Jaccard (the 100-TB candidate path:
-    global df-ordered shingles, each doc indexes its |A|-ceil(t|A|)+1
-    rarest, candidates equi-join on indexed shingles only). Same exact
-    output as all-pairs, so the same DuckDB oracle certifies it."""
-    return _r6(
-        DD.ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents"), threshold=0.5, method="prefix"
-        ),
-        ["jaccard"],
-    )
-
-
-def q_duplicate_text_spans(spark, sf_dir):
-    """Exact duplicate-SPAN detection (substring dedup, Lee et al. 2022):
-    maximal runs of >= 10 consecutive tokens shared verbatim between two
-    documents — k=8 gram matches grouped by (pair, diagonal) and merged
-    by the island trick; the gram self-join rides the triangle-chunked
-    bucket_pair_candidates so boilerplate grams can't serialize a task.
-    Oracle: a naive-join DuckDB mirror of the same gram/diagonal/island
-    construction."""
-    return DD.duplicate_text_spans(
-        _t(spark, sf_dir, "documents"), k=8, min_len=10
-    )
-
-
-def q_contamination_check(spark, sf_dir):
-    """Test-set contamination scan (decontamination pass): every tenth
-    doc_id is the held-out eval set; each remaining train doc reports how
-    many of its distinct 8-grams appear anywhere in the eval set. The
-    distinct eval-gram set is broadcast, so the train side never
-    shuffles."""
-    docs = _t(spark, sf_dir, "documents")
-    return DD.contamination_check(
-        docs.filter(F.col("doc_id") % 10 != 0),
-        docs.filter(F.col("doc_id") % 10 == 0),
-        k=8,
-    )
-
-
-_MIX = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.75}
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic domain-mixture sampling: per-source quota fractions,
-    selection a pure function of (doc_id, seed) via the portable 60-bit
-    hash — one map-side filter, reproducible on any partitioning."""
-    out = DD.stratified_sample(
-        _t(spark, sf_dir, "documents"), _MIX, seed=7, default=0.1
-    )
-    return out.select("doc_id", "source", "lang", "n_chars")
-
-
-def q_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH with the engine-portable md5 hash family — the full
-    pipeline (shingle hash, 32 universal-hash permutations, 8-band keys,
-    signature-agreement verify) is hash-checked against a DuckDB mirror.
-    The synthetic corpus is heavily templated (a third of all pairs sit
-    above jaccard 0.5), so the query uses a steep band curve (8 bands x
-    4 rows) with verify 0.7 — "find the strong dups in a sea of mild
-    similarity". bench.py separately times the xxhash64 production path."""
-    return DD.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
-        num_hashes=32, bands=8, verify_threshold=0.7, hash_family="md5",
-    )
-
-
-def q_simhash(spark, sf_dir):
-    """SimHash near-dups with the portable md5 family (60-bit fingerprints,
-    7 pigeonhole bands for max_hamming=6) — hash-checked vs DuckDB."""
-    out = DD.simhash_near_dup_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=6, bits=60, hash_family="md5"
-    )
-    return out.select("doc_id_a", "doc_id_b", F.col("hamming").cast("long").alias("hamming"))
-
-
-def q_minhash_components(spark, sf_dir):
-    """Transitive near-dup clusters over the MinHash+LSH pair graph
-    (keep-one-per-CLUSTER dedup needs components, not edges): min-label +
-    pointer-doubling connected components, component = min reachable doc
-    id, plus the cluster size. Value-checked against a DuckDB recursive-CTE
-    transitive closure over the identical portable-md5 pair query."""
-    pairs = DD.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
-        num_hashes=32, bands=8, verify_threshold=0.7, hash_family="md5",
-    )
-    comp = DD.near_dup_components(pairs)
-    sz = comp.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
-    return comp.join(sz, "component").select("doc_id", "component", "csize")
-
-
-_CURATION_FRACTIONS = {f"src{i}": 0.3 + 0.05 * i for i in range(10)}
-
-
-def q_curation_pipeline(spark, sf_dir):
-    """End-to-end training-data curation pass, the composition a real
-    pipeline runs: Gopher quality filter (corpus thresholds) -> exact
-    dedup keep-min-id -> deterministic stratified mixture sampling
-    (src0-src9 explicit fractions, 0.5 default) -> per-source document
-    and token report. Every stage is an existing value-checked operator;
-    this query certifies that they COMPOSE (schema contracts, join keys,
-    determinism end-to-end), one aggregate per stage, no UDFs."""
-    docs = _t(spark, sf_dir, "documents")
-    g = TX.gopher_quality_filter(docs, min_words=30, min_stop_hits=1)
-    kept = docs.join(
-        g.filter(F.col("passes") == 1).select("doc_id"), "doc_id"
-    )
-    canon = kept.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    deduped = kept.join(canon.select("doc_id"), "doc_id")
-    sampled = DD.stratified_sample(
-        deduped, _CURATION_FRACTIONS, default=0.5, seed=13
-    )
-    return (
-        sampled.select(
-            "source",
-            F.size(TX.tokens_expr(F.col("text"))).cast("long").alias("nt"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("nt").alias("n_tokens"),
-        )
-    )
-
-
 def q_token_count(spark, sf_dir):
     return TX.token_count(_t(spark, sf_dir, "documents"))
 
@@ -2351,21 +2210,6 @@ def q_bpe_count(spark, sf_dir):
 def q_quality(spark, sf_dir):
     return _r6(TX.quality_score(_t(spark, sf_dir, "documents")),
                ["mean_tok_len", "punct_ratio", "stop_ratio", "quality"])
-
-
-_TOKEN_BUDGETS = {f"src{i}": 400 + 60 * i for i in range(10)}
-
-
-def q_token_budget_sample(spark, sf_dir):
-    """Per-source token-budget mixing: take docs in portable-hash order
-    until each source's cumulative token count hits its budget (src0-src9
-    explicit budgets 400..940, the other ten sources the 700 default).
-    Engine runs the two-phase bucket plan; the oracle replays the NAIVE
-    full running-sum rule, so the match validates the decomposition."""
-    out = DD.token_budget_sample(
-        _t(spark, sf_dir, "documents"), _TOKEN_BUDGETS, default=700
-    )
-    return out.select("doc_id", "source", "n_tokens")
 
 
 def q_gopher_rules(spark, sf_dir):
@@ -2380,14 +2224,6 @@ def q_gopher_rules(spark, sf_dir):
                                    min_words=30, min_stop_hits=1)
     return _r6(out, ["mean_word_len", "alpha_frac", "symbol_ratio",
                      "dup_line_frac", "top2_char_frac"])
-
-
-def q_pack_sequences(spark, sf_dir):
-    """Deterministic sequence packing: global token-tape offsets in
-    portable-hash order, cut into 512-token training sequences. Engine runs
-    the bucketed parallel-prefix plan; the oracle replays the naive single
-    global running sum, so the match validates the decomposition."""
-    return DD.pack_sequences(_t(spark, sf_dir, "documents"), 512)
 
 
 def q_unigram_logprob(spark, sf_dir):
@@ -2406,7 +2242,7 @@ def q_fingerprint(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# round-5 additions: C4 cleaning, corpus line dedup, PII scrub, DSIR
+# round-5 additions: C4 cleaning, PII scrub, DSIR
 # ---------------------------------------------------------------------------
 def _lined_docs(docs: DataFrame) -> DataFrame:
     """Deterministically rebuild each synthetic doc as a 6-line 'page'
@@ -2477,15 +2313,6 @@ def q_c4_rules(spark, sf_dir):
     page filter. One whole-stage-codegen scan, zero shuffles; the cleaned
     page text itself is value-checked against the DuckDB mirror."""
     return TX.c4_quality_filter(_lined_docs(_t(spark, sf_dir, "documents")))
-
-
-def q_line_dedup(spark, sf_dir):
-    """CCNet-style corpus-level line dedup (Wenzek et al. 2020): lines
-    repeated verbatim across the corpus (planted boilerplate + natural
-    short-vocab collisions) are removed everywhere; per-doc text is
-    reassembled in original line order. One line-count aggregate + one
-    anti-join + one per-doc reassembly aggregate."""
-    return DD.dedup_lines(_lined_docs(_t(spark, sf_dir, "documents")))
 
 
 def _pii_docs(docs: DataFrame) -> DataFrame:
@@ -2594,61 +2421,6 @@ def q_gopher_repetition(spark, sf_dir):
     return TX.gopher_repetition(_paged_docs(_t(spark, sf_dir, "documents")))
 
 
-def _slogan_docs(docs: DataFrame) -> DataFrame:
-    """Append deterministic repeated material for the span-removal rule:
-    docs with doc_id % 3 == 0 share a verbatim 12-token slogan (5 full
-    8-grams -> removed everywhere but the canonical doc); the others get
-    a 7-token filler (NO full 8-gram fits inside it, and its boundary
-    grams mix in doc-specific text, so it is never removed — pins the
-    k-token detection floor); docs with doc_id % 17 == 0 additionally
-    repeat their own leading 8 tokens at the tail (a within-doc duplicate
-    — the later occurrence is removed). Mirrored by _SLOGAN_SQL."""
-    did = F.col("doc_id")
-    toks = TX.tokens_expr(F.col("text"))
-    lead8 = F.array_join(F.slice(toks, 1, 8), " ")
-    t2 = F.concat(
-        F.col("text"),
-        F.lit(" "),
-        F.when(
-            did % 3 == 0,
-            F.lit("the quick brown fox jumps over the lazy dog again and again"),
-        ).otherwise(F.lit("completely ordinary filler phrase that varies nowhere")),
-        F.when(did % 17 == 0, F.concat(F.lit(" "), lead8)).otherwise(F.lit("")),
-    )
-    return docs.select("doc_id", t2.alias("text"))
-
-
-_SLOGAN_SQL = """
-SELECT doc_id,
-       text || ' '
-    || (CASE WHEN doc_id % 3 = 0
-             THEN 'the quick brown fox jumps over the lazy dog again and again'
-             ELSE 'completely ordinary filler phrase that varies nowhere' END)
-    || (CASE WHEN doc_id % 17 = 0
-             THEN ' ' || COALESCE(array_to_string(toks[1:8], ' '), '')
-             ELSE '' END) AS text
-FROM (
-  SELECT doc_id, text,
-         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-              ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
-  FROM documents
-)
-"""
-
-
-def q_remove_duplicate_spans(spark, sf_dir):
-    """Exact-substring dedup REMOVAL (Lee et al. 2022 position-marking
-    variant over 8-grams): duplicated k-grams keep only their globally
-    smallest (doc_id, pos) occurrence; every other occurrence's covered
-    tokens are cut and docs are rebuilt in order. Planted 12-token slogan
-    (removed everywhere but one doc), 7-token filler (below the k floor —
-    never removed), within-doc tail repeats (doc_id%17). The rebuilt
-    text is value-checked byte-for-byte."""
-    return DD.remove_duplicate_spans(
-        _slogan_docs(_t(spark, sf_dir, "documents")), k=8
-    )
-
-
 def _multilang_docs(docs: DataFrame) -> DataFrame:
     """Rebuild a four-language corpus deterministically: doc_id % 4 picks
     the language; non-English docs repeat a stopword-laden phrase
@@ -2700,54 +2472,3 @@ def q_language_id_multi(spark, sf_dir):
     four-language corpus + planted stopword-free noise docs ('unknown').
     One codegen'd scan, zero shuffles; all four ratios value-checked."""
     return TX.language_id_multi(_multilang_docs(_t(spark, sf_dir, "documents")))
-
-
-def q_train_val_test_split(spark, sf_dir):
-    """Deterministic train/val/test assignment: u = portable md5-prefix
-    hash of (seed, doc_id) scaled to [0,1); bands test < 0.05, val next
-    0.05, train the rest. Pure map-side expression — re-runs on a grown
-    corpus never reassign an existing doc."""
-    return DD.train_val_test_split(_t(spark, sf_dir, "documents"))
-
-
-def _pairwise_docs(docs: DataFrame) -> DataFrame:
-    """Append a 13-token phrase unique to each (2p, 2p+1) doc pair — so
-    shared runs exist ONLY within the pair (no hot gram buckets) — and
-    REPLACE every doc_id % 10 == 4 doc by its bare phrase (that doc is
-    then fully covered by its partner: the containment case). Mirrored by
-    _PAIRWISE_SQL."""
-    did = F.col("doc_id")
-    p = F.expr("CAST((doc_id - doc_id % 2) / 2 AS BIGINT)")
-    # pair id sits MID-phrase so no 8-gram is common across different
-    # pairs (prefix 5 tokens, suffix 7 tokens — both under k)
-    phrase = F.concat(
-        F.lit("shared passage q w e "), p.cast("string"), F.lit(" r t y u i o p")
-    )
-    t2 = F.when(did % 10 == 4, phrase).otherwise(
-        F.concat(F.col("text"), F.lit(" "), phrase)
-    )
-    return docs.select("doc_id", t2.alias("text"))
-
-
-_PAIRWISE_SQL = """
-SELECT doc_id,
-       CASE WHEN doc_id % 10 = 4
-            THEN 'shared passage q w e ' || CAST(CAST((doc_id - doc_id % 2) / 2 AS BIGINT) AS VARCHAR)
-                 || ' r t y u i o p'
-            ELSE text || ' shared passage q w e '
-                 || CAST(CAST((doc_id - doc_id % 2) / 2 AS BIGINT) AS VARCHAR)
-                 || ' r t y u i o p' END AS text
-FROM documents
-"""
-
-
-def q_doc_containment(spark, sf_dir):
-    """Near-subset detection (Broder containment axis): per near-dup pair,
-    the fraction of each doc covered by shared >= 10-token runs; either
-    side >= 0.5 flags containment. Pairs planted one-per-(2p, 2p+1) so
-    every gram bucket holds exactly its pair's occurrences (no quadratic
-    hot buckets); doc_id % 10 == 4 docs are bare phrases — fully contained
-    in their partner."""
-    return DD.doc_containment(
-        _pairwise_docs(_t(spark, sf_dir, "documents")), k=8, min_len=10
-    )

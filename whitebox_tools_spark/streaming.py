@@ -145,143 +145,3 @@ def streaming_cell_stats(points, *, cell: float = 125.0):
     return keyed.groupBy("cx", "cy").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-
-
-def streaming_exact_dedup(docs):
-    """STREAMING exact dedup against all history via applyInPandasWithState
-    (the stream-side complement of dedup.exact_dedup): documents group by
-    their text; per-group state carries (canonical_doc_id, n_seen) across
-    micro-batches, so every arriving document is labeled against EVERYTHING
-    the stream has ever seen, not just its own trigger. Within one
-    micro-batch ties resolve to the smallest doc_id (deterministic); across
-    batches the earlier arrival wins (stream order — the streaming
-    semantics). State is Spark-managed and checkpointed: a killed query
-    restarted on the same checkpoint resumes deduplicating against full
-    history, which is the property batch anti-joins cannot give a
-    continuous ingest pipeline.
-
-    Grouping on the raw text keeps the semantics exact at any content
-    length; a production 10^12-doc deployment would group on a 128-bit
-    content digest instead (state-store key size) with the same plan
-    shape — one shuffle by key, partition-local state.
-    Works only on a streaming DataFrame with columns (doc_id, text).
-    -> stream of (doc_id, canonical_id, is_dup, n_seen)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "doc_id long, canonical_id long, is_dup boolean, n_seen long"
-    state_schema = "canon long, n long"
-
-    def update(key, pdfs, state):
-        canon, n = (state.get if state.exists else (None, 0))
-        rows = []
-        batch_ids = []
-        for pdf in pdfs:
-            batch_ids.extend(int(x) for x in pdf["doc_id"])
-        for did in sorted(batch_ids):
-            if canon is None:
-                canon = did
-            n += 1
-            rows.append((did, canon, did != canon, n))
-        state.update((int(canon), int(n)))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "canonical_id", "is_dup", "n_seen"]
-        )
-
-    return docs.select("doc_id", "text").groupBy("text").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_minhash_near_dup(
-    docs,
-    *,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    verify_threshold: float = 0.5,
-    hash_family: str = "md5",
-):
-    """STREAMING MinHash+LSH near-dup against ALL history — the stream-side
-    complement of dedup.minhash_lsh_pairs: every arriving document emits a
-    pair for each earlier stream document (any micro-batch, any trigger)
-    that shares one of its LSH band buckets and whose signature-agreement
-    Jaccard estimate clears verify_threshold.
-
-    Plan shape mirrors the batch path's scaling story: signatures and band
-    keys are the SAME stateless column expressions (minhash_signatures /
-    md5 band keys — no UDF), the stream shuffles once on (band, key), and
-    applyInPandasWithState keeps per-BUCKET history (doc ids + signatures)
-    in the Spark state store, so comparisons are bucket-local, never
-    corpus-wide. Checkpoint-resumable: a killed query restarted on the same
-    checkpoint resumes matching against full history.
-
-    A pair sharing several buckets is emitted once per shared band (state
-    is per-group; cross-group dedup belongs to the consumer — exactly the
-    multi-band collision the batch path dedupes in bucket_pair_candidates).
-    Per-bucket state grows with bucket population (num_hashes longs per
-    doc); hot templated buckets are the memory bound — a production
-    deployment caps history per bucket (evicting oldest) the same way the
-    batch path triangle-chunks hot buckets.
-    Works only on a streaming DataFrame with columns (doc_id, text).
-    -> stream of (band, doc_id_a, doc_id_b, est_jaccard), doc_id_a the
-    earlier arrival (within a batch: the smaller id).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from whitebox_tools_spark.operators.dedup import minhash_signatures
-
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(
-        docs, n=n, num_hashes=num_hashes, hash_family=hash_family,
-        repartition=False,
-    )
-
-    def band_key(b: int):
-        lo, hi = b * rows_per_band, (b + 1) * rows_per_band
-        if hash_family == "md5":
-            parts = ", ".join(f"cast(sig[{i}] as string)" for i in range(lo, hi))
-            return F.expr(f"md5(concat_ws(',', {parts}))")
-        return F.xxhash64(*[F.col("sig")[i] for i in range(lo, hi)]).cast("string")
-
-    banded = sigs.withColumn(
-        "band",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("b"), band_key(b).alias("h"))
-                    for b in range(bands)
-                ]
-            )
-        ),
-    ).select("doc_id", "sig", F.col("band.b").alias("b"), F.col("band.h").alias("h"))
-
-    out_schema = "band int, doc_id_a long, doc_id_b long, est_jaccard double"
-    state_schema = "ids array<long>, sigs array<array<long>>"
-
-    def update(key, pdfs, state):
-        ids, hist = (state.get if state.exists else ([], []))
-        ids = list(ids)
-        hist = [list(s) for s in hist]
-        band = int(key[0])
-        arrivals = []
-        for pdf in pdfs:
-            for did, sig in zip(pdf["doc_id"], pdf["sig"]):
-                arrivals.append((int(did), [int(x) for x in sig]))
-        rows = []
-        for did, sig in sorted(arrivals):
-            for hid, hsig in zip(ids, hist):
-                est = sum(a == b for a, b in zip(hsig, sig)) / num_hashes
-                if est >= verify_threshold:
-                    rows.append((band, hid, did, est))
-            ids.append(did)
-            hist.append(sig)
-        state.update((ids, hist))
-        yield pd.DataFrame(
-            rows, columns=["band", "doc_id_a", "doc_id_b", "est_jaccard"]
-        )
-
-    return banded.groupBy("b", "h").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
