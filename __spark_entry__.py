@@ -1,6 +1,6 @@
 """Driver contract for the whitebox_tools_spark engine.
 
-The engine's 457 query bodies, fixtures, and DuckDB oracle builders live
+The engine's 445 query bodies, fixtures, and DuckDB oracle builders live
 in the package (whitebox_tools_spark/queries/ — core fixtures, query-body
 families, oracle builders, flagship; operators own their domain oracles,
 e.g. operators/lidar.py, operators/ml.py). This module is the thin driver

@@ -34,9 +34,6 @@ BENCH_QUERIES = [
     "polygons_to_raster",
     "block_max_gridding",
     "raster_zip_ops",
-    "token_count",
-    "quality_score",
-    "fingerprint",
 ]
 
 def multiscale_radius_sweep(spark) -> dict:
@@ -152,7 +149,7 @@ def main():
     spark = get_spark(app_name="wts-bench")
     # warm-up: touch every table + spin up the Python worker pool once, so
     # per-query timings measure the operators, not JVM/worker cold start
-    for t in ["customer", "supplier", "part", "lineitem", "documents"]:
+    for t in ["customer", "supplier", "part", "lineitem"]:
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
     E.q_pip(spark, sf_dir).limit(1).count()
 
@@ -163,37 +160,6 @@ def main():
         t0 = time.time()
         qs[name](spark, sf_dir).count()
         timings[name] = round(time.time() - t0, 3)
-
-    # round-5 text-cleaning additions, reported as their own block (the
-    # headline suite metric stays like-for-like across rounds)
-    text_extras = {}
-    t0 = time.time()
-    text_extras["gopher_pass_rows"] = (
-        qs["gopher_rules"](spark, sf_dir).filter("passes = 1").count()
-    )
-    text_extras["gopher_rules_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    text_extras["unigram_lp_rows"] = qs["unigram_logprob_quality"](
-        spark, sf_dir
-    ).count()
-    text_extras["unigram_lp_sec"] = round(time.time() - t0, 3)
-    # final-wave cleaning ops (each over the full documents table)
-    t0 = time.time()
-    text_extras["c4_keep_rows"] = (
-        qs["c4_rules"](spark, sf_dir).filter("keep_doc = 1").count()
-    )
-    text_extras["c4_rules_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    text_extras["pii_rows"] = qs["pii_redaction"](spark, sf_dir).count()
-    text_extras["pii_redaction_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    text_extras["dsir_rows"] = qs["dsir_importance"](spark, sf_dir).count()
-    text_extras["dsir_importance_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    text_extras["gopher_rep_pass_rows"] = (
-        qs["gopher_repetition"](spark, sf_dir).filter("passes = 1").count()
-    )
-    text_extras["gopher_repetition_sec"] = round(time.time() - t0, 3)
 
     ms_stats = multiscale_radius_sweep(spark)
     hier_stats = hier_base_case_2m()
@@ -213,7 +179,6 @@ def main():
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf),
-                "text_extras": text_extras,
                 "multiscale_radius": ms_stats,
                 "hier_base_2m": hier_stats,
                 "geodocs": {

@@ -31,13 +31,6 @@ HEADLINE = [
     "topographic_hachures",
     # round-5 additions
     "embankment_removal",
-    "gopher_rules",
-    "unigram_logprob_quality",
-    "c4_rules",
-    "pii_redaction",
-    "dsir_importance",
-    "gopher_repetition",
-    "language_id_multi",
 ]
 
 

@@ -96,13 +96,37 @@ def test_simplify_rdp():
     assert len(sx) == 5
 
 
+def _brute_intersections(a_rows, b_rows):
+    out = set()
+    for (p1, ax0, ay0, ax1, ay1) in a_rows:
+        for (p2, bx0, by0, bx1, by1) in b_rows:
+            rx, ry = ax1 - ax0, ay1 - ay0
+            sx, sy = bx1 - bx0, by1 - by0
+            den = rx * sy - ry * sx
+            if den == 0.0:
+                continue
+            t = ((bx0 - ax0) * sy - (by0 - ay0) * sx) / den
+            u = ((bx0 - ax0) * ry - (by0 - ay0) * rx) / den
+            if 0.0 <= t <= 1.0 and 0.0 <= u <= 1.0:
+                out.add((p1, p2, round(ax0 + t * rx, 6), round(ay0 + t * ry, 6)))
+    return out
+
+
+def _line_intersections(spark, a_rows, b_rows):
+    import pandas as pd
+    from whitebox_tools_spark.operators.vector_ops import line_intersections
+
+    cols = ["poly_id", "x0", "y0", "x1", "y1"]
+    a_df = spark.createDataFrame(pd.DataFrame(a_rows, columns=cols))
+    b_df = spark.createDataFrame(pd.DataFrame(b_rows, columns=cols))
+    return {(r.parent1, r.parent2, r.x, r.y)
+            for r in line_intersections(a_df, b_df).collect()}
+
+
 def test_line_intersections_long_segment_brute_force(spark):
     # one globally-long segment among many short ones: the p99-sized grid
     # must still report every crossing exactly once (the long row covers
     # many cells; canonical-cell dedup keeps each pair unique)
-    import pandas as pd
-    from whitebox_tools_spark.operators.vector_ops import line_intersections
-
     rng_a = []
     for i in range(40):
         x = float(i) * 2.5
@@ -111,25 +135,25 @@ def test_line_intersections_long_segment_brute_force(spark):
     rng_b = [(200 + j, float(j) * 7.0, -2.0, float(j) * 7.0 + 0.5, 2.0)
              for j in range(15)]
 
-    def brute(a_rows, b_rows):
-        out = set()
-        for (p1, ax0, ay0, ax1, ay1) in a_rows:
-            for (p2, bx0, by0, bx1, by1) in b_rows:
-                rx, ry = ax1 - ax0, ay1 - ay0
-                sx, sy = bx1 - bx0, by1 - by0
-                den = rx * sy - ry * sx
-                if den == 0.0:
-                    continue
-                t = ((bx0 - ax0) * sy - (by0 - ay0) * sx) / den
-                u = ((bx0 - ax0) * ry - (by0 - ay0) * rx) / den
-                if 0.0 <= t <= 1.0 and 0.0 <= u <= 1.0:
-                    out.add((p1, p2, round(ax0 + t * rx, 6), round(ay0 + t * ry, 6)))
-        return out
+    want = _brute_intersections(rng_a, rng_b)
+    assert _line_intersections(spark, rng_a, rng_b) == want and len(want) > 10
 
-    cols = ["poly_id", "x0", "y0", "x1", "y1"]
-    a_df = spark.createDataFrame(pd.DataFrame(rng_a, columns=cols))
-    b_df = spark.createDataFrame(pd.DataFrame(rng_b, columns=cols))
-    got = {(r.parent1, r.parent2, r.x, r.y)
-           for r in line_intersections(a_df, b_df).collect()}
-    want = brute(rng_a, rng_b)
-    assert got == want and len(want) > 10
+
+def test_line_intersections_on_world_edge(spark):
+    # A ends on the vertical B at x, which is the segments' min x and so the
+    # grid's origin. ax0 + t*rx (t == 1) lands one ulp left of x, in cell
+    # ix = -1, which is in neither world-clamped segment cover; unless the
+    # point's cell is clamped too, the exact-once cell filter drops the pair.
+    cases = [
+        (10.109027106901756, 0.7761174288038939, 0.1, 0.9221885624698875,
+         -2.9191003055282696, 4.665079342021176),
+        (11.795373371392419, -1.25, 1.7, 2.5, -3.0, 6.0),
+        (7.648132434792485, 3.5, 0.3, -0.75, -4.0, 1.0),
+    ]
+    for ax0, ay0, x, ay1, by0, by1 in cases:
+        a = [(1, ax0, ay0, x, ay1)]
+        b = [(2, x, by0, x, by1)]
+        assert ax0 + (x - ax0) < x
+        want = _brute_intersections(a, b)
+        assert len(want) == 1
+        assert _line_intersections(spark, a, b) == want, (x, want)

@@ -1,4 +1,4 @@
-"""Tests: focal, hexbin, sources, shape tools, trend surface, streaming, ML."""
+"""Tests: focal, hexbin, sources, shape tools, trend surface, ML."""
 
 import math
 
@@ -214,33 +214,6 @@ def test_trend_surface_recovers_plane(spark):
     out = {(r.row, r.col): r.value for r in fitted.collect()}
     for (r, c, v) in recs[:5]:
         assert abs(out[(r, c)] - v) < 1e-6
-
-
-def test_event_window_counts_batch(spark, sf_dir):
-    from whitebox_tools_spark.streaming import event_window_counts
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = event_window_counts(events, window="1 hour")
-    total = out.agg(F.sum("n")).collect()[0][0]
-    assert total == events.count()
-
-
-def test_streaming_pip_tiles(spark, geodocs_path):
-    import __spark_entry__ as E
-    from whitebox_tools_spark.streaming import incremental_pip_tiles, run_to_memory
-
-    sdf = incremental_pip_tiles(spark, geodocs_path, E.PARTS, E.IDX, E.TILE)
-    assert sdf.isStreaming
-    run_to_memory(sdf, "pip_tiles_test")
-    got = spark.sql("SELECT sum(n_points) AS n FROM pip_tiles_test").collect()[0].n
-    # batch equivalence
-    from whitebox_tools_spark.ingest import decode_points
-    from whitebox_tools_spark.operators.pip import points_in_polygons
-
-    docs = spark.read.parquet(geodocs_path)
-    pts = decode_points(docs).drop("z")
-    expect = points_in_polygons(pts, E.PARTS, E.IDX).count()
-    assert got == expect
 
 
 def test_kmeans_and_pca(spark, sf_dir):

@@ -216,3 +216,24 @@ def test_modified_kmeans_matches_serial(spark):
     assert got == want
     # clusters 4.0 and 4.2 merged -> exactly 3 final classes
     assert len(set(got.values())) == 3
+
+
+def test_lloyd_kmeans_partitions_ids(spark):
+    from whitebox_tools_spark.operators.ml import lloyd_kmeans
+
+    import numpy as np
+    rng = np.random.default_rng(5)
+    centers = np.array([[0.0, 0.0], [10.0, 10.0], [0.0, 10.0]])
+    pts = [
+        (i, *(centers[i % 3] + rng.normal(0, 0.3, 2)).tolist())
+        for i in range(90)
+    ]
+    df = spark.createDataFrame(pts, "pid long, x double, y double")
+    out = lloyd_kmeans(df, ["x", "y"], 3, id_col="pid", iters=6).collect()
+    assert len(out) == 90
+    by_cluster = {}
+    for r in out:
+        by_cluster.setdefault(r.cluster, set()).add(r.pid % 3)
+    # converged: each cluster contains exactly one generator center
+    assert all(len(v) == 1 for v in by_cluster.values())
+    assert len(by_cluster) == 3

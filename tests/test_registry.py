@@ -12,7 +12,7 @@ import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "whitebox_tools_spark"
-SCANNED = [PKG, "scripts", "bench.py", "perfbench"]
+SCANNED = [PKG, "scripts", "tests", "bench.py", "perfbench", "__spark_entry__.py"]
 
 
 def test_every_query_has_an_oracle():

@@ -2,7 +2,6 @@
 equivalence on randomized tree networks + partition invariance."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from whitebox_tools_spark.operators.vector_streams import (
     correct_stream_vector_direction,
@@ -216,61 +215,3 @@ def test_lqr_closed_form_matches_matrix_solve(spark):
         )
         r = 0.0 if noom == 0 or den == 0 else noom / den
         assert abs(g.goodness - r * r) < 1e-9
-
-
-def test_streaming_cell_stats_stateful(spark, tmp_path):
-    """applyInPandasWithState: state carries across micro-batches
-    (maxFilesPerTrigger=1 forces one trigger per file) and the final
-    per-cell stats equal the batch union's."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from whitebox_tools_spark.streaming import streaming_cell_stats
-
-    d = tmp_path / "pts"
-    d.mkdir()
-    rows1 = [(float(i * 40 % 500), float(i * 70 % 500), float(i)) for i in range(50)]
-    rows2 = [(float(i * 40 % 500), float(i * 70 % 500), float(i + 100)) for i in range(50)]
-    spark.createDataFrame(rows1, "x double, y double, z double").coalesce(1).write.parquet(
-        str(d / "b1")
-    )
-    spark.createDataFrame(rows2, "x double, y double, z double").coalesce(1).write.parquet(
-        str(d / "b2")
-    )
-
-    stream = (
-        spark.readStream.schema("x double, y double, z double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d) + "/*")
-    )
-    out = streaming_cell_stats(stream, cell=125.0)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("cell_stats")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = (
-        spark.sql("SELECT * FROM cell_stats").toPandas()
-        .sort_values(["cx", "cy", "n"])
-        .groupby(["cx", "cy"])
-        .last()  # update mode: last emission per key is the final state
-        .reset_index()
-    )
-    batch = spark.createDataFrame(
-        rows1 + rows2, "x double, y double, z double"
-    ).select(
-        F.floor(F.col("x") / 125.0).cast("long").alias("cx"),
-        F.floor(F.col("y") / 125.0).cast("long").alias("cy"),
-        "z",
-    ).groupBy("cx", "cy").agg(
-        F.count("*").alias("n"), F.sum("z").alias("sum_z"),
-        F.min("z").alias("min_z"), F.max("z").alias("max_z"),
-    ).toPandas().sort_values(["cx", "cy"]).reset_index(drop=True)
-    got = got[["cx", "cy", "n", "sum_z", "min_z", "max_z"]].reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        got.astype({"n": "int64"}), batch.astype({"n": "int64"}), check_like=True
-    )

@@ -3,8 +3,7 @@
 Re-answers the analyses of the reference geoprocessing toolkit (WhiteboxTools
 v2.3.0, studied read-only at /root/reference) as distributed DataFrame
 pipelines: point-in-polygon overlay, kNN/IDW gridding, zonal statistics,
-raster<->vector conversion, deterministic tiling — plus the text-analysis
-and cleaning operators left from an earlier training-data suite.
+raster<->vector conversion, deterministic tiling.
 
 Architecture (NOT a port):
   - data model: long-form cell tables / typed geometry structs / flat point

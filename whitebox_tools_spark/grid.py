@@ -112,8 +112,8 @@ _ZOOM_SHIFT = 2 * _IY_BITS  # cell_id = zoom*2^52 + ix*2^26 + iy
 @dataclass(frozen=True)
 class CellIndex:
     """Quadtree cell index: world square [origin, origin+extent)^2, 2^zoom
-    cells per side at a given zoom. Pure-arithmetic ids; parents by integer
-    halving; k-rings by offset enumeration (driver-side, tiny)."""
+    cells per side at a given zoom. Pure-arithmetic ids, as Column
+    expressions, SQL text and numpy."""
 
     origin_x: float
     origin_y: float
@@ -147,18 +147,18 @@ class CellIndex:
         )
 
     def cell_of_xy_expr(self, x: Column, y: Column) -> Column:
-        return self.cell_id_expr(self.ix_expr(x), self.iy_expr(y))
+        """Id of the cell holding (x, y), with ix/iy clamped into [0, n-1]:
+        a point on or past the world's edge (e.g. one ulp left of origin_x)
+        gets the edge cell, never an out-of-world id that aliases another
+        cell's. NULL stays NULL (least/greatest would skip it)."""
+        hi = self.n - 1
 
-    def parent_expr(self, ix: Column, iy: Column, dz: int) -> Column:
-        """Cell id at zoom-dz containing (ix, iy)."""
-        pz = self.zoom - dz
-        if pz < 0:
-            raise ValueError("dz larger than zoom")
-        return (
-            F.lit(pz * (1 << _ZOOM_SHIFT)).cast("long")
-            + F.floor(ix / F.lit(1 << dz)).cast("long") * F.lit(1 << _IY_BITS).cast("long")
-            + F.floor(iy / F.lit(1 << dz)).cast("long")
-        )
+        def clamp(i: Column) -> Column:
+            return F.when(i < 0, F.lit(0).cast("long")).when(
+                i > hi, F.lit(hi).cast("long")
+            ).otherwise(i)
+
+        return self.cell_id_expr(clamp(self.ix_expr(x)), clamp(self.iy_expr(y)))
 
     # --- SQL mirrors ---
     def ix_sql(self, x: str) -> str:

@@ -39,22 +39,6 @@ def decode_points(docs: DataFrame, *, include_z: bool = True) -> DataFrame:
     )
 
 
-def decode_media(docs: DataFrame) -> DataFrame:
-    """media spans -> (doc_id, media_ref, media_type, payload, width,
-    height, duration_ms) with NULL payload (opaque binary arrives from the
-    media store at read time)."""
-    s = docs.select("doc_id", F.explode("spans").alias("s")).filter(F.col("s.kind") == "media")
-    return s.select(
-        "doc_id",
-        F.col("s.media_ref").alias("media_ref"),
-        F.lit("image").alias("media_type"),
-        F.lit(None).cast("binary").alias("payload"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(1000).alias("duration_ms"),
-    )
-
-
 def decode_polygons(docs: DataFrame) -> DataFrame:
     """polygon spans -> part table (poly_id, part_idx, is_hole, xs, ys).
     Ring strings are ';'-separated closed rings 'x1 y1 x2 y2 ...'; hole-ness
@@ -203,33 +187,3 @@ def decode_raster_cells(
         F.when(F.col("v").cast("double") != nd_col, F.col("v").cast("double")).alias("value"),
     )
     return meta, cells
-
-
-def redact_text_spans(docs: DataFrame) -> DataFrame:
-    """PII scrub applied NATIVELY to the interleaved span table (the
-    north-rule input shape): only kind='text' spans have their text
-    redacted (email -> IPv4 -> phone, the operators.text.pii_redact
-    patterns and order); every other span (point/polygon/media/attr/
-    raster) and every offset is carried through byte-identical, so span
-    COUNT, KIND SEQUENCE and ORDER are preserved exactly — the cleaning
-    pass composes with the geometry/media decoders with zero interference.
-    One per-row higher-order transform, no explode, no shuffle."""
-    from whitebox_tools_spark.operators.text import PII_EMAIL, PII_IPV4, PII_PHONE
-
-    def red(t):
-        r1 = F.regexp_replace(t, PII_EMAIL, "<EMAIL>")
-        r2 = F.regexp_replace(r1, PII_IPV4, "<IP>")
-        return F.regexp_replace(r2, PII_PHONE, "<PHONE>")
-
-    return docs.withColumn(
-        "spans",
-        F.transform(
-            F.col("spans"),
-            lambda s: F.struct(
-                s.kind.alias("kind"),
-                F.when(s.kind == "text", red(s.text)).otherwise(s.text).alias("text"),
-                s.media_ref.alias("media_ref"),
-                s.offset.alias("offset"),
-            ),
-        ),
-    )

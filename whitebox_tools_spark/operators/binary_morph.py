@@ -313,61 +313,6 @@ _BSC_DX = [-1, -1, 0, 1, 1, 1, 0, -1]
 _BSC_DY = [0, -1, -1, -1, 0, 1, 1, 1]
 
 
-def bsc_metrics(fg: np.ndarray) -> float:
-    """Boundary Shape Complexity for ONE polygon's local boolean grid
-    (boundary_shape_complexity.rs:262-492): line-thin the mask, then for
-    each skeleton end node walk the exterior link in raster-scan order
-    (shared `visited`, the reference's last-unvisited-neighbour step rule
-    and <3-degree gate), and return
-    100 * (sum of (1 + link_length) - longest - second longest) /
-    n_skeleton_cells."""
-    sk = thin_grid(fg.astype(np.float64))
-    h, w = sk.shape
-    visited = np.zeros((h, w), dtype=np.int8)
-    num_cells = 0
-    total = 0.0
-    longest = 0
-    second = 0
-    for r in range(h):
-        for c in range(w):
-            if sk[r, c] > 0.0:
-                n = 0
-                for a in range(8):
-                    rr, cc = r + _BSC_DY[a], c + _BSC_DX[a]
-                    if 0 <= rr < h and 0 <= cc < w and sk[rr, cc] == 1.0:
-                        n += 1
-                num_cells += 1
-                if n == 1:
-                    total += 1.0
-                    rn, cn = r, c
-                    link_length = 1
-                    while True:
-                        visited[rn, cn] = 1
-                        n2 = 0
-                        next_n = 8
-                        for a in range(8):
-                            rr, cc = rn + _BSC_DY[a], cn + _BSC_DX[a]
-                            if 0 <= rr < h and 0 <= cc < w and sk[rr, cc] == 1.0:
-                                n2 += 1
-                                if visited[rr, cc] == 0:
-                                    next_n = a
-                        if n2 < 3 and next_n < 8:
-                            link_length += 1
-                            rn += _BSC_DY[next_n]
-                            cn += _BSC_DX[next_n]
-                        else:
-                            break
-                    total += link_length
-                    if longest < link_length:
-                        second = longest
-                        longest = link_length
-                    elif second < link_length:
-                        second = link_length
-    if num_cells == 0:
-        return 0.0
-    return 100.0 * (total - longest - second) / num_cells
-
-
 def _bsc_partials(vals: np.ndarray) -> list:
     """Per-VALUE partial BSC statistics for ONE union-mask connected
     component (boundary_shape_complexity.rs:397-462): thin the component's

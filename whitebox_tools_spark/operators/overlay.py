@@ -367,31 +367,6 @@ def polygon_overlay_areas(
     )
 
 
-def _boundary_inside_pieces(src_parts, other_parts, other_edges):
-    """Kept directed pieces of src's boundary (split at other's boundary,
-    midpoint inside other) as a list of (x0, y0, x1, y1)."""
-    out = []
-    for xs, ys, _hole in src_parts:
-        xs = np.asarray(xs, dtype=np.float64)
-        ys = np.asarray(ys, dtype=np.float64)
-        for i in range(len(xs) - 1):
-            p0x, p0y, p1x, p1y = xs[i], ys[i], xs[i + 1], ys[i + 1]
-            ts = G.segment_split_ts(p0x, p0y, p1x, p1y, *other_edges)
-            breaks = np.concatenate([[0.0], ts, [1.0]])
-            t0s, t1s = breaks[:-1], breaks[1:]
-            tm = (t0s + t1s) / 2.0
-            mx = p0x + tm * (p1x - p0x)
-            my = p0y + tm * (p1y - p0y)
-            inside = G.point_in_parts(mx, my, other_parts)
-            for k in np.nonzero(inside)[0]:
-                sx0 = p0x + t0s[k] * (p1x - p0x) if t0s[k] > 0 else p0x
-                sy0 = p0y + t0s[k] * (p1y - p0y) if t0s[k] > 0 else p0y
-                sx1 = p0x + t1s[k] * (p1x - p0x) if t1s[k] < 1 else p1x
-                sy1 = p0y + t1s[k] * (p1y - p0y) if t1s[k] < 1 else p1y
-                out.append((sx0, sy0, sx1, sy1))
-    return out
-
-
 def _boundary_pieces(
     src_parts, other_parts, other_edges, *, keep_inside: bool = True,
     reverse: bool = False,

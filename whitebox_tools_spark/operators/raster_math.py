@@ -17,7 +17,7 @@ is small, otherwise a co-partitioned shuffle join.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # MAP: value -> value (tool name -> expression builder)
@@ -327,15 +327,6 @@ def mosaic(layers: list[DataFrame], *, method: str = "last") -> DataFrame:
 def band_select(cells: DataFrame, band: int, *, band_col: str = "band") -> DataFrame:
     """One band of a multi-band cell table as a plain (row, col, value)."""
     return cells.filter(F.col(band_col) == band).drop(band_col)
-
-
-def combine_bands(
-    cells: DataFrame, band_a: int, band_b: int, op: str, *, band_col: str = "band"
-) -> DataFrame:
-    """ZIP of two bands of ONE multi-band table — a self-aligned combine;
-    a single shuffle on (row, col) when not pre-bucketed."""
-    return combine(band_select(cells, band_a, band_col=band_col),
-                   band_select(cells, band_b, band_col=band_col), op)
 
 
 def normalized_difference(

@@ -61,16 +61,6 @@ def tile_counts(tiled: DataFrame, *, min_points: int = 0) -> DataFrame:
     return out
 
 
-def write_tiles(tiled: DataFrame, path: str, *, n_buckets: int | None = None) -> None:
-    """Materialize tiles as a partitioned parquet layout. repartitionByRange
-    keeps each tile's rows contiguous (one writer per tile range) — the
-    distributed equivalent of the reference writing one LAS file per tile."""
-    df = tiled
-    if n_buckets:
-        df = df.repartitionByRange(n_buckets, "tile")
-    df.write.mode("overwrite").partitionBy("tile").parquet(path)
-
-
 def block_gridding(
     points: DataFrame,
     grid: GridSpec,

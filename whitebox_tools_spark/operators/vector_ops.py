@@ -92,26 +92,6 @@ def convex_hull_per_feature(parts: DataFrame) -> DataFrame:
     )
 
 
-def simplify_features(parts: DataFrame, epsilon: float) -> DataFrame:
-    """SimplifyLinesOrPolygons via Ramer-Douglas-Peucker (line_ops.rs:66)."""
-
-    @F.pandas_udf("struct<xs:array<double>, ys:array<double>>")
-    def simp(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        nxs, nys = [], []
-        for x, y in zip(xs, ys):
-            sx, sy = G.simplify_rdp(x, y, epsilon)
-            nxs.append(list(sx))
-            nys.append(list(sy))
-        return pd.DataFrame({"xs": nxs, "ys": nys})
-
-    return (
-        parts.withColumn("s", simp(F.col("xs"), F.col("ys")))
-        .withColumn("xs", F.col("s.xs"))
-        .withColumn("ys", F.col("s.ys"))
-        .drop("s")
-    )
-
-
 # ---------------------------------------------------------------------------
 # TBL class — the reference's only true relational operators
 # ---------------------------------------------------------------------------

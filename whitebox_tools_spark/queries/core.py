@@ -27,7 +27,6 @@ from whitebox_tools_spark import synth
 from whitebox_tools_spark.grid import CellIndex, GridSpec, lidar_tile_exprs, lidar_tile_sql
 from whitebox_tools_spark.operators import raster_math as RM
 from whitebox_tools_spark.operators import stats as ST
-from whitebox_tools_spark.operators import text as TX
 from whitebox_tools_spark.operators.extract import extract_raster_values_at_points
 from whitebox_tools_spark.operators.knn import idw_gridding, nearest_neighbour_gridding
 from whitebox_tools_spark.operators.pip import points_in_polygons
@@ -190,5 +189,3 @@ def _grid_centers_cte(g: GridSpec) -> str:
         f"{g.x_center_sql('c')} AS x, {g.y_center_sql('r')} AS y "
         f"FROM generate_series(0, {g.rows - 1}) t1(r), generate_series(0, {g.cols - 1}) t2(c)"
     )
-
-

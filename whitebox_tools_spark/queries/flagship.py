@@ -46,14 +46,7 @@ _DRIVER_WINDOW: list[str] = [
     "trend_surface_vector_points",
     "boundary_shape_complexity",
     "embankment_mapping",
-    "c4_rules",
-    "pii_redaction",
-    "dsir_importance",
-    "gopher_repetition",
-    "unigram_logprob_quality",
-    "gopher_rules",
     "embankment_removal",
-    "language_id_multi",
     "lidar_ransac_planes",
     "lidar_segmentation",
     "lidar_segmentation_based_filter",
@@ -507,18 +500,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lidar_filter_classes": q_lidar_filter_classes,
         "lidar_block_minimum": q_lidar_block_minimum,
         "lidar_block_maximum": q_lidar_block_maximum,
-        "token_count": q_token_count,
-        "bpe_token_count": q_bpe_count,
-        "quality_score": q_quality,
-        "gopher_rules": q_gopher_rules,
-        "unigram_logprob_quality": q_unigram_logprob,
-        "c4_rules": q_c4_rules,
-        "gopher_repetition": q_gopher_repetition,
-        "language_id_multi": q_language_id_multi,
-        "pii_redaction": q_pii_redaction,
-        "dsir_importance": q_dsir_importance,
-        "language_id": q_langid,
-        "fingerprint": q_fingerprint,
         "clip_lines": q_clip_lines,
         "erase_lines": q_erase_lines,
         "polygon_overlay": q_polygon_overlay,
@@ -1616,25 +1597,6 @@ FROM ({_cloud_ext_cte()}) t WHERE abs(scan_angle) <= 10.0
         "kmeans_clustering": _kmeans_sql(),
         "modified_kmeans_clustering": _modified_kmeans_sql(),
         "pca": _pca_values_sql(),
-        "token_count": """
-SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens
-FROM documents
-""",
-        "bpe_token_count": r"""
-SELECT doc_id, len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]+')) AS n_pieces
-FROM documents
-""",
-        "quality_score": _quality_sql(),
-        "gopher_rules": _gopher_rules_sql(min_words=30, min_stop_hits=1),
-        "unigram_logprob_quality": TX.unigram_logprob_quality_oracle_sql(),
-        "c4_rules": TX.c4_rules_oracle_sql(_LINED_SQL),
-        "gopher_repetition": TX.gopher_repetition_oracle_sql(_PAGED_SQL),
-        "language_id_multi": TX.language_id_multi_oracle_sql(_MULTILANG_SQL),
-        "pii_redaction": TX.pii_redact_oracle_sql(_PII_SQL),
-        "dsir_importance": TX.dsir_importance_oracle_sql(),
-        "language_id": _langid_sql(),
-        "fingerprint": _fingerprint_sql(),
         "clip_lines": _ovl.clip_lines_oracle_sql(_cust_segs_cte(), PARTS, erase=False),
         "erase_lines": _ovl.clip_lines_oracle_sql(_cust_segs_cte(), PARTS, erase=True),
         "polygon_overlay": _ovl.overlay_oracle_sql(PARTS_A, PARTS),
@@ -1651,5 +1613,3 @@ FROM ({_ovl._overlay_core_sql(PARTS_A, PARTS)}) q
         ),
     }
     return sq
-
-

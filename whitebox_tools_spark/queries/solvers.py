@@ -2124,9 +2124,6 @@ def _order_cloud(spark, sf_dir):
     )
 
 
-_ORDER_CLOUD_SQL = None  # built in oracle_sql()
-
-
 def q_lidar_point_stats(spark, sf_dir):
     """LidarPointStats (lidar_analysis/lidar_point_stats.rs): per-cell
     count/min/max/mean z."""
@@ -2197,278 +2194,3 @@ SELECT i.pid AS point_id,
             ELSE coalesce(k.ms, -1e308) > {t!r} END AS is_off_terrain
 FROM inr i LEFT JOIN knn k ON k.pid = i.pid
 """
-
-
-def q_token_count(spark, sf_dir):
-    return TX.token_count(_t(spark, sf_dir, "documents"))
-
-
-def q_bpe_count(spark, sf_dir):
-    return TX.bpe_ish_token_count(_t(spark, sf_dir, "documents"))
-
-
-def q_quality(spark, sf_dir):
-    return _r6(TX.quality_score(_t(spark, sf_dir, "documents")),
-               ["mean_tok_len", "punct_ratio", "stop_ratio", "quality"])
-
-
-def q_gopher_rules(spark, sf_dir):
-    """Gopher quality-rule filter (Rae et al. 2021 App. A1.1, published
-    thresholds): per-doc rule inputs + 0/1 passes flag. Rules 1-6 are one
-    codegen'd scan; the top-2-gram repetition rule is the only aggregate
-    (explode -> map-side-combined count -> per-doc max -> equi-join).
-    min_words/min_stop_hits lowered to corpus-appropriate values (the
-    synthetic vocab holds a single Gopher stop word) so the flag splits;
-    all other thresholds are the paper's published defaults."""
-    out = TX.gopher_quality_filter(_t(spark, sf_dir, "documents"),
-                                   min_words=30, min_stop_hits=1)
-    return _r6(out, ["mean_word_len", "alpha_frac", "symbol_ratio",
-                     "dup_line_frac", "top2_char_frac"])
-
-
-def q_unigram_logprob(spark, sf_dir):
-    """CCNet-family LM quality proxy: per-doc mean token log-prob under the
-    corpus's own unigram distribution (9-dp scaled-integer quantization
-    makes the float fold order- and engine-invariant)."""
-    return TX.unigram_logprob_quality(_t(spark, sf_dir, "documents"))
-
-
-def q_langid(spark, sf_dir):
-    return _r6(TX.language_id(_t(spark, sf_dir, "documents")), ["stop_ratio"])
-
-
-def q_fingerprint(spark, sf_dir):
-    return TX.fingerprint(_t(spark, sf_dir, "documents"))
-
-
-# ---------------------------------------------------------------------------
-# round-5 additions: C4 cleaning, PII scrub, DSIR
-# ---------------------------------------------------------------------------
-def _lined_docs(docs: DataFrame) -> DataFrame:
-    """Deterministically rebuild each synthetic doc as a 6-line 'page'
-    (the corpus has no newlines/punctuation) so the line-level rules have
-    real structure to act on: sentence-like lines from token slices, a
-    too-short line, a rotating terminal-punct line, planted javascript /
-    lorem-ipsum / brace / boilerplate lines keyed on doc_id. Mirrored
-    byte-for-byte by _LINED_SQL."""
-    toks = TX.tokens_expr(F.col("text"))
-
-    def seg(a: int, b: int):
-        return F.array_join(F.slice(toks, a, b - a + 1), " ")
-
-    did = F.col("doc_id")
-    l1 = F.concat(seg(1, 8), F.lit("."))
-    l2 = seg(9, 11)
-    l3 = F.concat(
-        seg(12, 20), F.when(did % 3 == 0, F.lit("!")).otherwise(F.lit(""))
-    )
-    l4 = F.when(
-        did % 7 == 0,
-        F.lit("please enable javascript to view this page content now."),
-    ).otherwise(F.concat(seg(21, 27), F.lit("?")))
-    l5 = F.when(
-        did % 2 == 0, F.lit("subscribe to our newsletter today.")
-    ).otherwise(F.lit("thanks for reading this fine article."))
-    l6 = (
-        F.when(did % 11 == 0, F.lit("lorem ipsum dolor sit amet."))
-        .when(did % 13 == 0, F.lit("config { x }"))
-        .otherwise(F.concat(seg(1, 8), F.lit(".")))
-    )
-    return docs.select(
-        "doc_id", F.concat_ws("\n", l1, l2, l3, l4, l5, l6).alias("text")
-    )
-
-
-def _lined_seg_sql(a: int, b: int) -> str:
-    return f"COALESCE(array_to_string(toks[{a}:{b}], ' '), '')"
-
-
-_LINED_SQL = f"""
-SELECT doc_id,
-       {_lined_seg_sql(1, 8)} || '.' || chr(10)
-    || {_lined_seg_sql(9, 11)} || chr(10)
-    || {_lined_seg_sql(12, 20)}
-       || (CASE WHEN doc_id % 3 = 0 THEN '!' ELSE '' END) || chr(10)
-    || (CASE WHEN doc_id % 7 = 0
-             THEN 'please enable javascript to view this page content now.'
-             ELSE {_lined_seg_sql(21, 27)} || '?' END) || chr(10)
-    || (CASE WHEN doc_id % 2 = 0 THEN 'subscribe to our newsletter today.'
-             ELSE 'thanks for reading this fine article.' END) || chr(10)
-    || (CASE WHEN doc_id % 11 = 0 THEN 'lorem ipsum dolor sit amet.'
-             WHEN doc_id % 13 = 0 THEN 'config {{ x }}'
-             ELSE {_lined_seg_sql(1, 8)} || '.' END) AS text
-FROM (
-  SELECT doc_id,
-         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-              ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
-  FROM documents
-)
-"""
-
-
-def q_c4_rules(spark, sf_dir):
-    """C4 cleaning heuristics (Raffel et al. 2020 §2.2, published rules)
-    over deterministically line-structured pages: terminal-punctuation /
-    >= 5-word / no-javascript line filter, lorem-ipsum / brace / < 3-line
-    page filter. One whole-stage-codegen scan, zero shuffles; the cleaned
-    page text itself is value-checked against the DuckDB mirror."""
-    return TX.c4_quality_filter(_lined_docs(_t(spark, sf_dir, "documents")))
-
-
-def _pii_docs(docs: DataFrame) -> DataFrame:
-    """Append deterministic synthetic PII (2 emails, 1 IPv4, 1 phone,
-    keyed on doc_id) to every doc — the corpus itself contains no digits
-    or @, so every match the scrubber finds is planted and exactly
-    mirrored by _PII_SQL."""
-    did = F.col("doc_id")
-    t2 = F.concat(
-        F.col("text"),
-        F.lit(" contact user"), did.cast("string"),
-        F.lit("@example.com or admin"), (did % 50).cast("string"),
-        F.lit("@test.org visit 10."), (did % 256).cast("string"),
-        F.lit(".0.1 call +1 555 00"), (did % 10).cast("string"),
-        F.lit(" 12"), (did % 89).cast("string"), F.lit(" now"),
-    )
-    return docs.select("doc_id", t2.alias("text"))
-
-
-_PII_SQL = """
-SELECT doc_id,
-       text || ' contact user' || CAST(doc_id AS VARCHAR)
-            || '@example.com or admin' || CAST(doc_id % 50 AS VARCHAR)
-            || '@test.org visit 10.' || CAST(doc_id % 256 AS VARCHAR)
-            || '.0.1 call +1 555 00' || CAST(doc_id % 10 AS VARCHAR)
-            || ' 12' || CAST(doc_id % 89 AS VARCHAR) || ' now' AS text
-FROM documents
-"""
-
-
-def q_pii_redaction(spark, sf_dir):
-    """PII scrub over docs with planted emails/IPv4/phone: per-class
-    counts + the fully redacted text, value-checked byte-for-byte. Pure
-    regex column expressions — one codegen'd scan, zero shuffles."""
-    return TX.pii_redact(_pii_docs(_t(spark, sf_dir, "documents")))
-
-
-def q_dsir_importance(spark, sf_dir):
-    """DSIR importance weights (Xie et al. 2023): hashed-bigram bucket
-    log-ratio of target (source in src0..src4) vs raw distributions,
-    add-1 smoothed, 9-dp scaled-integer fold (exact long arithmetic,
-    partition-order invariant). Explode -> 256-row bucket aggregate ->
-    broadcast joins -> one per-doc aggregate."""
-    return TX.dsir_importance(_t(spark, sf_dir, "documents"))
-
-
-def _paged_docs(docs: DataFrame) -> DataFrame:
-    """Deterministically rebuild each doc as a 3-paragraph page (lines
-    inside paragraphs, blank line between paragraphs) with planted
-    repetition: doc_id % 4 duplicates a line, doc_id % 5 duplicates a
-    whole paragraph — so every branch of the Gopher repetition family
-    fires on a known subset. Mirrored byte-for-byte by _PAGED_SQL."""
-    toks = TX.tokens_expr(F.col("text"))
-
-    def seg(a: int, b: int):
-        return F.array_join(F.slice(toks, a, b - a + 1), " ")
-
-    did = F.col("doc_id")
-    lA, lB = seg(1, 6), seg(7, 12)
-    lC = F.when(did % 4 == 0, seg(1, 6)).otherwise(seg(13, 18))
-    lD = seg(19, 24)
-    p1 = F.concat_ws("\n", lA, lB)
-    p2 = F.when(did % 5 == 0, p1).otherwise(F.concat_ws("\n", lC, lD))
-    p3 = seg(25, 30)
-    return docs.select(
-        "doc_id", F.concat_ws("\n\n", p1, p2, p3).alias("text")
-    )
-
-
-_PAGED_SQL = """
-SELECT doc_id,
-       p1 || chr(10) || chr(10)
-    || (CASE WHEN doc_id % 5 = 0 THEN p1
-             ELSE lC || chr(10) || lD END) || chr(10) || chr(10)
-    || p3 AS text
-FROM (
-  SELECT doc_id,
-         lA || chr(10) || lB AS p1,
-         CASE WHEN doc_id % 4 = 0 THEN lA ELSE lX END AS lC,
-         lD, p3
-  FROM (
-    SELECT doc_id,
-           COALESCE(array_to_string(toks[1:6], ' '), '') AS lA,
-           COALESCE(array_to_string(toks[7:12], ' '), '') AS lB,
-           COALESCE(array_to_string(toks[13:18], ' '), '') AS lX,
-           COALESCE(array_to_string(toks[19:24], ' '), '') AS lD,
-           COALESCE(array_to_string(toks[25:30], ' '), '') AS p3
-    FROM (
-      SELECT doc_id,
-             CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                  ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
-      FROM documents
-    )
-  )
-)
-"""
-
-
-def q_gopher_repetition(spark, sf_dir):
-    """The complete Gopher repetition family (Rae et al. 2021 Table A1:
-    dup line/para fractions + char fractions, top-{2,3,4}-gram char mass,
-    dup-{5..10}-gram distinct-covered-position char fractions, published
-    thresholds) over deterministically paged docs with planted duplicate
-    lines (doc_id%4) and paragraphs (doc_id%5). Every rule is an
-    explode -> keyed hash aggregate -> equi-join — no windows, no UDFs."""
-    return TX.gopher_repetition(_paged_docs(_t(spark, sf_dir, "documents")))
-
-
-def _multilang_docs(docs: DataFrame) -> DataFrame:
-    """Rebuild a four-language corpus deterministically: doc_id % 4 picks
-    the language; non-English docs repeat a stopword-laden phrase
-    (doc_id % 3 + 1 times) so its function words dominate; English docs
-    keep the corpus text (its vocabulary contains 'the'). doc_id % 31 == 0
-    docs become stopword-free noise -> 'unknown'. Mirrored by
-    _MULTILANG_SQL."""
-    did = F.col("doc_id")
-    reps = (did % 3 + 1).cast("int")
-    fr = F.array_join(
-        F.array_repeat(F.lit("le chat et les oiseaux dans la maison pour sur"), reps), " "
-    )
-    de = F.array_join(
-        F.array_repeat(F.lit("der hund und die katze mit ein buch von zu"), reps), " "
-    )
-    es = F.array_join(
-        F.array_repeat(F.lit("el perro y las aves en que una casa por es"), reps), " "
-    )
-    t2 = (
-        F.when(did % 31 == 0, F.lit("zzz qqq www rrr ttt yyy uuu"))
-        .when(did % 4 == 1, fr)
-        .when(did % 4 == 2, de)
-        .when(did % 4 == 3, es)
-        .otherwise(F.col("text"))
-    )
-    return docs.select("doc_id", t2.alias("text"))
-
-
-_MULTILANG_SQL = """
-SELECT doc_id,
-       CASE WHEN doc_id % 31 = 0 THEN 'zzz qqq www rrr ttt yyy uuu'
-            WHEN doc_id % 4 = 1 THEN array_to_string(list_transform(
-                generate_series(1, CAST(doc_id % 3 + 1 AS INT)),
-                x -> 'le chat et les oiseaux dans la maison pour sur'), ' ')
-            WHEN doc_id % 4 = 2 THEN array_to_string(list_transform(
-                generate_series(1, CAST(doc_id % 3 + 1 AS INT)),
-                x -> 'der hund und die katze mit ein buch von zu'), ' ')
-            WHEN doc_id % 4 = 3 THEN array_to_string(list_transform(
-                generate_series(1, CAST(doc_id % 3 + 1 AS INT)),
-                x -> 'el perro y las aves en que una casa por es'), ' ')
-            ELSE text END AS text
-FROM documents
-"""
-
-
-def q_language_id_multi(spark, sf_dir):
-    """Multi-language ID (stopword-profile argmax over de/en/es/fr, the
-    dependency-free Cavnar-Trenkle core) on a deterministically rebuilt
-    four-language corpus + planted stopword-free noise docs ('unknown').
-    One codegen'd scan, zero shuffles; all four ratios value-checked."""
-    return TX.language_id_multi(_multilang_docs(_t(spark, sf_dir, "documents")))

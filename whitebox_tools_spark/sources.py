@@ -23,8 +23,6 @@ Implemented here:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -140,16 +138,3 @@ def write_ascii_grid(cells: DataFrame, grid: GridSpec, path: str) -> None:
         )
         for r in range(grid.rows):
             fh.write(" ".join(repr(v) for v in arr[r]) + "\n")
-
-
-def print_raster_tags(grid: GridSpec) -> dict:
-    """PrintGeoTiffTags analogue: the grid metadata as a dict."""
-    return {
-        "rows": grid.rows,
-        "columns": grid.cols,
-        "west": grid.west,
-        "north": grid.north,
-        "resolution_x": grid.res_x,
-        "resolution_y": grid.res_y,
-        "nodata": grid.nodata,
-    }

@@ -520,14 +520,6 @@ def decode_zlidar(data: bytes, *, id_base: int = 0) -> pd.DataFrame:
     )
 
 
-def write_zlidar(points: DataFrame, path: str, *, scale: float = 0.001, level: int = 6) -> None:
-    """Driver-side small-cloud zLidar sink (single file; tile upstream for
-    big outputs — the read side is fully distributed)."""
-    pdf = points.toPandas()
-    with open(path, "wb") as fh:
-        fh.write(encode_zlidar(pdf, scale=scale, level=level))
-
-
 def read_zlidar(spark: SparkSession, path: str) -> DataFrame:
     """Distributed zLidar directory read: binaryFile -> per-file Arrow
     decode, one task per tile file (mirrors lidar_io.read_las)."""
