@@ -1,5 +1,8 @@
 """kNN join / NN gridding / IDW vs brute-force oracle."""
 
+import gc
+import threading
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -190,3 +193,38 @@ def test_knn_join_job_count(spark):
     # 2 for the occupancy count, 6 for the candidate query on these
     # size-unknown inputs (AQE turns the cell join into a broadcast at run time)
     assert len(sc.statusTracker().getJobIdsForGroup("test_knn_join_job_count")) <= 8
+
+
+def _py4j_calls(fn) -> int:
+    """py4j round trips that fn() makes from the calling thread. py4j's
+    finalizer thread detaches garbage-collected JavaObjects on its own
+    schedule, so its calls are left out, and earlier garbage is collected
+    first."""
+    from py4j.clientserver import ClientServerConnection
+
+    orig = ClientServerConnection.send_command
+    me = threading.get_ident()
+    calls = [0]
+
+    def counted(self, command):
+        calls[0] += threading.get_ident() == me
+        return orig(self, command)
+
+    gc.collect()
+    ClientServerConnection.send_command = counted
+    try:
+        fn()
+    finally:
+        ClientServerConnection.send_command = orig
+    return calls[0]
+
+
+def test_nn_gridding_py4j_budget(spark):
+    # each step is one SQL projection and Column call sites are not
+    # captured (session.get_spark): ~250 round trips for a call that
+    # took ~2 800 when every Column operator was its own py4j call (the
+    # bound is ~1.5x the measured count)
+    pts_df, _ = _points(spark)
+    nearest_neighbour_gridding(pts_df, GRID, IDX).collect()  # warm the JVM-side lookups
+    n = _py4j_calls(lambda: nearest_neighbour_gridding(pts_df, GRID, IDX).collect())
+    assert n <= 375, n

@@ -92,7 +92,7 @@ def doc_points(doc_index: np.ndarray, seed: int) -> tuple[np.ndarray, np.ndarray
         px, py, pz = doc_points(doc_index[dup] - 1, seed)
         x[dup], y[dup], z[dup] = px, py, pz
     # edge points: ~1% exactly on a polygon edge midpoint
-    edge = sel >= 99
+    edge = sel >= 100 - int(EDGE_FRACTION * 100)
     if edge.any():
         mids = []
         for p in polys:

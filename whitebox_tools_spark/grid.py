@@ -206,44 +206,6 @@ class CellIndex:
 # ---------------------------------------------------------------------------
 # LidarTile-style flat tiling (lidar_analysis/lidar_tile.rs:300-325)
 # ---------------------------------------------------------------------------
-def lidar_tile_exprs(
-    x: Column,
-    y: Column,
-    *,
-    width: float,
-    height: float,
-    origin_x: float,
-    origin_y: float,
-    min_x: float,
-    min_y: float,
-    max_x: float,
-    max_y: float,
-) -> tuple[Column, Column, Column]:
-    """Reference tile assignment (lidar_tile.rs:300-325), as expressions:
-
-        start_x_grid = floor((min_x - origin_x) / width)
-        end_x_grid   = ceil((max_x - origin_x) / width)
-        cols         = |end_x_grid - start_x_grid|   (same for rows)
-        col  = floor((x - origin_x) / width - start_x_grid)
-        tile = row * cols + col
-
-    Returns (tile_col, tile_row, tile_id) columns.
-    """
-    import math
-
-    start_x_grid = math.floor((min_x - origin_x) / width)
-    end_x_grid = math.ceil((max_x - origin_x) / width)
-    start_y_grid = math.floor((min_y - origin_y) / height)
-    end_y_grid = math.ceil((max_y - origin_y) / height)
-    cols = abs(end_x_grid - start_x_grid)
-
-    tcol = F.floor((x - F.lit(origin_x)) / F.lit(width) - F.lit(start_x_grid)).cast("long")
-    trow = F.floor((y - F.lit(origin_y)) / F.lit(height) - F.lit(start_y_grid)).cast("long")
-    tile = trow * F.lit(cols).cast("long") + tcol
-    _ = end_y_grid  # rows count derivable; kept for parity documentation
-    return tcol, trow, tile
-
-
 def lidar_tile_sql(
     x: str,
     y: str,
@@ -257,7 +219,16 @@ def lidar_tile_sql(
     max_x: float,
     max_y: float,
 ) -> tuple[str, str, str]:
-    """SQL mirror of lidar_tile_exprs (identical arithmetic)."""
+    """Reference tile assignment (lidar_tile.rs:300-325), as SQL text over
+    the expressions x and y:
+
+        start_x_grid = floor((min_x - origin_x) / width)
+        end_x_grid   = ceil((max_x - origin_x) / width)
+        cols         = |end_x_grid - start_x_grid|   (same for rows)
+        col  = floor((x - origin_x) / width - start_x_grid)
+        tile = row * cols + col
+
+    Returns (tile_col, tile_row, tile_id) expressions (BIGINT)."""
     import math
 
     start_x_grid = math.floor((min_x - origin_x) / width)

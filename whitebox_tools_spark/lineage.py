@@ -12,9 +12,15 @@ Iceberg manifest list:
                                         row_count, content_hash}
 
 A stage writes bucket-by-bucket; a killed run leaves completed buckets +
-manifests behind; `run_stage` re-runs only the missing buckets (anti-join
-against the manifest). content_hash is an order-insensitive xor-sum of
-xxhash64 over the rows — cheap, associative, partition-order independent.
+manifests behind; `run_stage` re-runs only the missing buckets. The
+manifest is observed during the write itself (`DataFrame.observe`): one
+Spark job per bucket writes the parquet and yields row count, cell range
+and content hash, with no read-back. content_hash is an order-insensitive
+sum of 31-bit-masked xxhash64 row hashes — associative, partition-order
+independent and duplicate-sensitive. On resume a bucket counts as done
+only when its manifest exists AND the footer row counts of its part files
+(parquet metadata, no scan) sum to the manifest's row_count, so a deleted
+or truncated bucket directory is re-run instead of silently lost.
 
 Swapping the physical layer for Iceberg is a sink change only (writeTo +
 snapshot metadata), not a redesign.
@@ -26,7 +32,8 @@ import json
 import os
 from typing import Callable
 
-from pyspark.sql import DataFrame
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -36,14 +43,26 @@ def _manifest_dir(root: str) -> str:
     return d
 
 
+def _rows_on_disk(path: str) -> int | None:
+    """Sum of the footer row counts of a bucket's part files (metadata
+    only); None when the bucket directory is gone."""
+    if not os.path.isdir(path):
+        return None
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.startswith("part-") and f.endswith(".parquet")
+    )
+
+
 def completed_buckets(root: str) -> set[int]:
-    d = _manifest_dir(root)
-    out = set()
-    for f in os.listdir(d):
-        if f.endswith(".json"):
-            with open(os.path.join(d, f)) as fh:
-                out.add(json.load(fh)["bucket"])
-    return out
+    """Buckets with a manifest whose row_count the bucket's parquet footers
+    confirm."""
+    return {
+        m["bucket"]
+        for m in stage_metrics(root)
+        if _rows_on_disk(os.path.join(root, f"bucket={m['bucket']}")) == m["row_count"]
+    }
 
 
 def _run_bucket(
@@ -55,29 +74,23 @@ def _run_bucket(
 ) -> int:
     out_path = os.path.join(root, f"bucket={b}")
     df = df_for_bucket(b)
-    df.write.mode("overwrite").parquet(out_path)
-    written = df.sparkSession.read.parquet(out_path)
-    cols = written.columns
-    stats = (
-        written.withColumn(
-            # order-insensitive content hash: sum of 31-bit-masked row
-            # hashes — commutative, duplicate-sensitive, and overflow-free
-            # for < 2^31 rows per bucket even under ANSI mode
-            "__h",
-            F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(2147483647)),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (F.min(cell_col) if cell_col in cols else F.lit(None)).alias("cmin"),
-            (F.max(cell_col) if cell_col in cols else F.lit(None)).alias("cmax"),
-            F.sum("__h").alias("h"),
-        )
-        .collect()[0]
-    )
+    cols = df.columns
+    obs = Observation()  # default name: a fresh UUID, unique per bucket run
+    metrics = [
+        F.count(F.lit(1)).alias("n"),
+        # order-insensitive content hash: sum of 31-bit-masked row hashes —
+        # commutative, duplicate-sensitive, and overflow-free for < 2^31
+        # rows per bucket even under ANSI mode
+        F.sum(F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(2147483647))).alias("h"),
+    ]
+    if cell_col in cols:
+        metrics += [F.min(cell_col).alias("cmin"), F.max(cell_col).alias("cmax")]
+    df.observe(obs, *metrics).write.mode("overwrite").parquet(out_path)
+    stats = obs.get
     manifest = {
         "bucket": b,
-        "cell_min": stats["cmin"],
-        "cell_max": stats["cmax"],
+        "cell_min": stats.get("cmin"),
+        "cell_max": stats.get("cmax"),
         "row_count": stats["n"],
         "content_hash": str(stats["h"]),
     }
@@ -101,8 +114,8 @@ def run_stage(
     progress: Callable[[str], None] | None = None,
     max_concurrent: int = 4,
 ) -> list[int]:
-    """Execute a stage bucket-by-bucket with lineage; skip buckets whose
-    manifest already exists (resume). Returns the buckets actually run.
+    """Execute a stage bucket-by-bucket with lineage; skip buckets that
+    `completed_buckets` confirms (resume). Returns the buckets actually run.
 
     Buckets run CONCURRENTLY (max_concurrent submitter threads): Spark's
     scheduler interleaves their jobs across the executor pool (FIFO works;

@@ -49,6 +49,12 @@ Ties are pinned by (squared distance, point_id) so output is deterministic
 (the reference's tie order is its bin-scan/insertion order; fixtures carry
 equal values on ties — FIXTURES.md). A call runs the occupancy count and
 the candidate query, and leaves nothing persisted.
+
+Plans are built from SQL text: each step is one selectExpr/where over the
+CellIndex *_sql mirrors, so building a call's plan costs one py4j round
+trip per step rather than one per Column operator; building the plan in
+Python, not running it in Spark, is where a call spends most of its time.
+Only the reach table is computed in numpy.
 """
 
 from __future__ import annotations
@@ -57,7 +63,7 @@ import math
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark.grid import CellIndex, GridSpec
@@ -65,30 +71,28 @@ from whitebox_tools_spark.grid import CellIndex, GridSpec
 _OCC_ZOOM = 10  # occupancy is counted at this zoom or coarser: <= 4^10 cells
 
 
-def _with_cells(df: DataFrame, index: CellIndex, x: str, y: str) -> DataFrame:
-    return df.withColumn("__ix", index.ix_expr(F.col(x))).withColumn(
-        "__iy", index.iy_expr(F.col(y))
-    )
+def _dbl(v: float) -> str:
+    """A double literal as SQL text (a bare 0.5 would be a DECIMAL). The
+    *_sql mirrors write bare literals too, so coordinates are cast to DOUBLE
+    before they meet them."""
+    v = float(v)
+    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
 
 
 def _prep_points(points, index, point_id, px, py, z):
     """In-world points with their cell (__ix, __iy, __cell)."""
     hi = index.n - 1
-    return (
-        _with_cells(
-            points.select(
-                F.col(point_id).alias("point_id"),
-                F.col(px).alias("px"),
-                F.col(py).alias("py"),
-                F.col(z).alias("z"),
-            ),
-            index,
-            "px",
-            "py",
-        )
-        .filter(F.col("__ix").between(0, hi) & F.col("__iy").between(0, hi))
-        .withColumn("__cell", index.cell_id_expr(F.col("__ix"), F.col("__iy")))
-    )
+    ix = index.ix_sql(f"CAST(`{px}` AS DOUBLE)")
+    iy = index.iy_sql(f"CAST(`{py}` AS DOUBLE)")
+    return points.selectExpr(
+        f"`{point_id}` AS point_id",
+        f"`{px}` AS px",
+        f"`{py}` AS py",
+        f"`{z}` AS z",
+        f"{ix} AS __ix",
+        f"{iy} AS __iy",
+        f"{index.cell_id_sql(ix, iy)} AS __cell",
+    ).where(f"__ix BETWEEN 0 AND {hi} AND __iy BETWEEN 0 AND {hi}")
 
 
 def _reach_table(p: DataFrame, index: CellIndex, k: int) -> DataFrame:
@@ -98,7 +102,8 @@ def _reach_table(p: DataFrame, index: CellIndex, k: int) -> DataFrame:
     shift = max(0, index.zoom - _OCC_ZOOM)
     m = index.n >> shift
     counts = (
-        p.groupBy(F.shiftright("__ix", shift).alias("ox"), F.shiftright("__iy", shift).alias("oy"))
+        p.selectExpr(f"shiftright(__ix, {shift}) AS ox", f"shiftright(__iy, {shift}) AS oy")
+        .groupBy("ox", "oy")
         .count()
         .toArrow()
     )
@@ -131,42 +136,43 @@ def _neighbours(
     -> (target_id, tx, ty, point_id, px, py, z, dist_sq, rank), rank by
     (dist_sq, point_id)."""
     hi = index.n - 1
-    t = (
-        _with_cells(targets, index, "tx", "ty")
-        .dropna(subset=["__ix", "__iy"])  # greatest/least would clamp a NULL to 0
-        .withColumn("__cx", F.least(F.greatest("__ix", F.lit(0)), F.lit(hi)))
-        .withColumn("__cy", F.least(F.greatest("__iy", F.lit(0)), F.lit(hi)))
-        .select(
-            "target_id",
-            "tx",
-            "ty",
-            "__cx",
-            "__cy",
-            F.greatest(
-                F.abs(F.col("__ix") - F.col("__cx")), F.abs(F.col("__iy") - F.col("__cy"))
-            ).alias("__d0"),
-        )
-    )
-    reach = F.lit(int(math.floor(radius / index.cell_size)) + 1 if radius > 0.0 else 0)
+    # the clamp comes after the NULL filter: least/greatest would clamp a
+    # NULL index to an edge cell
+    t = targets.selectExpr(
+        "target_id",
+        "tx",
+        "ty",
+        f"{index.ix_sql('CAST(tx AS DOUBLE)')} AS __ix",
+        f"{index.iy_sql('CAST(ty AS DOUBLE)')} AS __iy",
+    ).where("__ix IS NOT NULL AND __iy IS NOT NULL")
+    cx, cy = f"least(greatest(__ix, 0), {hi})", f"least(greatest(__iy, 0), {hi})"
+    cols = [
+        "target_id",
+        "tx",
+        "ty",
+        f"{cx} AS __cx",
+        f"{cy} AS __cy",
+        f"greatest(abs(__ix - {cx}), abs(__iy - {cy})) AS __d0",
+    ]
+    reach = str(int(math.floor(radius / index.cell_size)) + 1 if radius > 0.0 else 0)
     if k > 0:
         shift = max(0, index.zoom - _OCC_ZOOM)
-        occ = F.shiftright("__cx", shift) * (index.n >> shift) + F.shiftright("__cy", shift)
-        t = t.withColumn("__occ", occ).join(F.broadcast(_reach_table(p, index, k)), "__occ")
-        reach = F.greatest(reach, F.ceil((F.col("__reach") + F.col("__d0")) * math.sqrt(2.0)))
-    t = t.withColumn("__e", F.least(reach, F.lit(hi)))
+        cols.append(f"shiftright({cx}, {shift}) * {index.n >> shift} + shiftright({cy}, {shift}) AS __occ")
+        reach = f"greatest({reach}, ceil((__reach + __d0) * {_dbl(math.sqrt(2.0))}))"
+    t = t.selectExpr(*cols)
+    if k > 0:
+        t = t.join(F.broadcast(_reach_table(p, index, k)), "__occ")
 
-    def span(c: str):
-        e = F.col("__e")
-        return F.sequence(F.greatest(F.col(c) - e, F.lit(0)), F.least(F.col(c) + e, F.lit(hi)))
+    def span(c: str) -> str:
+        return f"sequence(greatest({c} - __e, 0), least({c} + __e, {hi}))"
 
     probes = (
-        t.withColumn("__nx", F.explode(span("__cx")))
-        .withColumn("__ny", F.explode(span("__cy")))
-        .select(
-            "target_id", "tx", "ty", index.cell_id_expr(F.col("__nx"), F.col("__ny")).alias("__cell")
-        )
+        t.selectExpr("target_id", "tx", "ty", "__cx", "__cy", f"least({reach}, {hi}) AS __e")
+        .selectExpr("target_id", "tx", "ty", "__cy", "__e", f"explode({span('__cx')}) AS __nx")
+        .selectExpr("target_id", "tx", "ty", "__nx", f"explode({span('__cy')}) AS __ny")
+        .selectExpr("target_id", "tx", "ty", f"{index.cell_id_sql('__nx', '__ny')} AS __cell")
     )
-    cand = probes.join(p.select("__cell", "point_id", "px", "py", "z"), "__cell").select(
+    cand = probes.join(p.select("__cell", "point_id", "px", "py", "z"), "__cell").selectExpr(
         "target_id",
         "tx",
         "ty",
@@ -174,20 +180,17 @@ def _neighbours(
         "px",
         "py",
         "z",
-        (
-            (F.col("px") - F.col("tx")) * (F.col("px") - F.col("tx"))
-            + (F.col("py") - F.col("ty")) * (F.col("py") - F.col("ty"))
-        ).alias("dist_sq"),
+        "(px - tx) * (px - tx) + (py - ty) * (py - ty) AS dist_sq",
     )
-    w = Window.partitionBy("target_id")
-    ranked = cand.withColumn("rank", F.row_number().over(w.orderBy("dist_sq", "point_id")))
+    rank = "row_number() OVER (PARTITION BY target_id ORDER BY dist_sq, point_id) AS rank"
     if radius <= 0.0:
-        return ranked.filter(F.col("rank") <= k)
-    in_r = F.sqrt("dist_sq") <= F.lit(radius)
-    n_in = F.count(F.when(in_r, 1)).over(w)
+        return cand.selectExpr("*", rank).where(f"rank <= {k}")
+    in_r = f"sqrt(dist_sq) <= {_dbl(radius)}"
     return (
-        ranked.withColumn("__n_in", n_in)
-        .filter(((F.col("__n_in") >= k) & in_r) | ((F.col("__n_in") < k) & (F.col("rank") <= k)))
+        cand.selectExpr(
+            "*", rank, f"count(CASE WHEN {in_r} THEN 1 END) OVER (PARTITION BY target_id) AS __n_in"
+        )
+        .where(f"(__n_in >= {k} AND {in_r}) OR (__n_in < {k} AND rank <= {k})")
         .drop("__n_in")
     )
 
@@ -213,39 +216,28 @@ def knn_join(
     target gets all of them (best effort, like knn_search on a depleted
     index).
     """
-    t = targets.select(
-        F.col(target_id).alias("target_id"),
-        F.col(tx).alias("tx"),
-        F.col(ty).alias("ty"),
-    )
+    t = targets.selectExpr(f"`{target_id}` AS target_id", f"`{tx}` AS tx", f"`{ty}` AS ty")
     p = _prep_points(points, index, point_id, px, py, z)
-    return _neighbours(t, p, index, k).select(
-        "target_id", "point_id", "z", "dist_sq", F.sqrt("dist_sq").alias("dist"), "rank"
+    return _neighbours(t, p, index, k).selectExpr(
+        "target_id", "point_id", "z", "dist_sq", "sqrt(dist_sq) AS dist", "rank"
     )
 
 
 def _grid_targets(spark, grid: GridSpec) -> DataFrame:
-    """All output cells with centers at west+(col+0.5)*res_x,
-    north-(row+0.5)*res_y — the exact IDW/NN center formula
-    (idw_interpolation.rs:620-621). Partition count scales with the grid
-    (1 partition per ~256k cells) so small grids don't pay 32-task overhead
-    and huge grids still parallelize."""
+    """All output cells (row, col, x, y, target_id) with centers at
+    west+(col+0.5)*res_x, north-(row+0.5)*res_y — the exact IDW/NN center
+    formula (idw_interpolation.rs:620-621); target_id = row*cols + col is
+    the range id. Partition count scales with the grid (1 partition per
+    ~256k cells) so small grids don't pay 32-task overhead and huge grids
+    still parallelize."""
     n = grid.rows * grid.cols
-    return (
-        spark.range(n, numPartitions=max(1, n // 262144))
-        .select(
-            (F.col("id") / grid.cols).cast("long").alias("row"),
-            (F.col("id") % grid.cols).alias("col"),
-        )
-        .withColumn(
-            "x",
-            F.lit(grid.west) + (F.col("col").cast("double") + F.lit(0.5)) * F.lit(grid.res_x),
-        )
-        .withColumn(
-            "y",
-            F.lit(grid.north) - (F.col("row").cast("double") + F.lit(0.5)) * F.lit(grid.res_y),
-        )
-        .withColumn("target_id", F.col("row") * F.lit(grid.cols).cast("long") + F.col("col"))
+    row, col = f"CAST(id / {grid.cols} AS BIGINT)", f"id % {grid.cols}"
+    return spark.range(n, numPartitions=max(1, n // 262144)).selectExpr(
+        f"{row} AS row",
+        f"{col} AS col",
+        f"{_dbl(grid.west)} + (CAST({col} AS DOUBLE) + 0.5D) * {_dbl(grid.res_x)} AS x",
+        f"{_dbl(grid.north)} - (CAST({row} AS DOUBLE) + 0.5D) * {_dbl(grid.res_y)} AS y",
+        "id AS target_id",
     )
 
 
@@ -259,7 +251,7 @@ def _grid_neighbours(points, grid, index, *, radius, min_points, point_id, px, p
         raise ValueError("need radius > 0 or min_points > 0")
     targets = _grid_targets(points.sparkSession, grid)
     cand = _neighbours(
-        targets.select("target_id", F.col("x").alias("tx"), F.col("y").alias("ty")),
+        targets.selectExpr("target_id", "x AS tx", "y AS ty"),
         _prep_points(points, index, point_id, px, py, z),
         index,
         min_points,
@@ -281,25 +273,15 @@ def nearest_neighbour_gridding(
 ) -> DataFrame:
     """Dense (row, col, value) raster: nearest point's value per cell center,
     nodata where no point within max_dist (nearest_neighbour_gridding.rs:452-454)."""
-    spark = points.sparkSession
-    targets = _grid_targets(spark, grid)
-    nn = knn_join(
-        targets,
-        points,
-        1,
+    targets = _grid_targets(points.sparkSession, grid)
+    nn = _neighbours(
+        targets.selectExpr("target_id", "x AS tx", "y AS ty"),
+        _prep_points(points, index, point_id, px, py, z),
         index,
-        target_id="target_id",
-        tx="x",
-        ty="y",
-        point_id=point_id,
-        px=px,
-        py=py,
-        z=z,
-    ).filter(F.col("dist") <= F.lit(max_dist))
-    return targets.join(nn.select("target_id", "z"), "target_id", "left").select(
-        "row",
-        "col",
-        F.coalesce(F.col("z"), F.lit(grid.nodata)).alias("value"),
+        1,
+    ).where(f"sqrt(dist_sq) <= {_dbl(max_dist)}")
+    return targets.join(nn.select("target_id", "z"), "target_id", "left").selectExpr(
+        "row", "col", f"coalesce(z, {_dbl(grid.nodata)}) AS value"
     )
 
 
@@ -326,20 +308,17 @@ def idw_gridding(
     targets, cand = _grid_neighbours(
         points, grid, index, radius=radius, min_points=min_points, point_id=point_id, px=px, py=py, z=z
     )
-    cand = cand.withColumn("dist", F.sqrt("dist_sq"))
+    # reference guards `if dist > 0` before accumulating (idw_interpolation.rs:630-638)
+    inv_w = f"power(sqrt(dist_sq), {_dbl(weight)})"
     idw = cand.groupBy("target_id").agg(
-        F.count(F.lit(1)).alias("n_hits"),
-        F.min(F.when(F.col("dist_sq") == 0.0, F.col("z"))).alias("zero_z"),
-        # reference guards `if dist > 0` before accumulating (idw_interpolation.rs:630-638)
-        F.sum(F.when(F.col("dist_sq") > 0.0, F.col("z") / F.pow(F.col("dist"), F.lit(weight)))).alias("wz"),
-        F.sum(F.when(F.col("dist_sq") > 0.0, F.lit(1.0) / F.pow(F.col("dist"), F.lit(weight)))).alias("w"),
+        F.expr("count(1) AS n_hits"),
+        F.expr("min(CASE WHEN dist_sq = 0.0D THEN z END) AS zero_z"),
+        F.expr(f"sum(CASE WHEN dist_sq > 0.0D THEN z / {inv_w} END) AS wz"),
+        F.expr(f"sum(CASE WHEN dist_sq > 0.0D THEN 1.0D / {inv_w} END) AS w"),
     )
-    value = F.when(F.col("zero_z").isNotNull(), F.col("zero_z")).otherwise(
-        F.col("wz") / F.col("w")
+    out = idw.where(f"n_hits >= {max(min_points, 1)}").selectExpr(
+        "target_id", "CASE WHEN zero_z IS NOT NULL THEN zero_z ELSE wz / w END AS value"
     )
-    out = idw.filter(F.col("n_hits") >= F.lit(max(min_points, 1))).select(
-        "target_id", value.alias("value")
-    )
-    return targets.join(out, "target_id", "left").select(
-        "row", "col", F.coalesce(F.col("value"), F.lit(grid.nodata)).alias("value")
+    return targets.join(out, "target_id", "left").selectExpr(
+        "row", "col", f"coalesce(value, {_dbl(grid.nodata)}) AS value"
     )

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.grid import GridSpec, lidar_tile_exprs
+from whitebox_tools_spark.grid import GridSpec, lidar_tile_sql
 
 
 def assign_tiles(
@@ -36,10 +36,14 @@ def assign_tiles(
     max_x: float,
     max_y: float,
 ) -> DataFrame:
-    """Append (tile_col, tile_row, tile) per lidar_tile.rs:322-325."""
-    tcol, trow, tile = lidar_tile_exprs(
-        F.col(x),
-        F.col(y),
+    """Append (tile_col, tile_row, tile) per lidar_tile.rs:322-325, as one
+    projection over the grid.lidar_tile_sql text (the DuckDB oracles use
+    the same text). The coordinates are cast to DOUBLE so that the text's
+    bare literals (DECIMAL in Spark SQL) take double arithmetic whatever
+    the input column type."""
+    tcol, trow, tile = lidar_tile_sql(
+        f"CAST(`{x}` AS DOUBLE)",
+        f"CAST(`{y}` AS DOUBLE)",
         width=width,
         height=height,
         origin_x=origin_x,
@@ -49,7 +53,7 @@ def assign_tiles(
         max_x=max_x,
         max_y=max_y,
     )
-    return points.withColumn("tile_col", tcol).withColumn("tile_row", trow).withColumn("tile", tile)
+    return points.selectExpr("*", f"{tcol} AS tile_col", f"{trow} AS tile_row", f"{tile} AS tile")
 
 
 def tile_counts(tiled: DataFrame, *, min_points: int = 0) -> DataFrame:

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark import synth
-from whitebox_tools_spark.grid import CellIndex, GridSpec, lidar_tile_exprs, lidar_tile_sql
+from whitebox_tools_spark.grid import CellIndex, GridSpec, lidar_tile_sql
 from whitebox_tools_spark.operators import raster_math as RM
 from whitebox_tools_spark.operators import stats as ST
 from whitebox_tools_spark.operators.extract import extract_raster_values_at_points

@@ -25,6 +25,14 @@ def get_spark(
     cores: parallelism for local mode; defaults to $SPARK_GRAFT_CPUS or '*'.
     shuffle_partitions: defaults to max(cores, 8) — on a real cluster this
     would be ~2-3x total executor cores; AQE coalesces the excess at runtime.
+
+    DataFrame debugging is off (spark.python.sql.dataFrameDebugging.enabled):
+    with it on, PySpark wraps every Column function to walk the Python stack
+    and record the call site over ~10 extra py4j round trips, which more than
+    doubles the cost of building an operator's plan in Python. The price is that
+    a DataFrame error's query context no longer names the Python call site;
+    pass extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}
+    to get it back while debugging.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -63,6 +71,7 @@ def get_spark(
         # non-erroring float division; ANSI would raise on 1/d at d=0 paths
         # the operators guard explicitly.
         .config("spark.sql.ansi.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
