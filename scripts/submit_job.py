@@ -4,14 +4,17 @@ pipeline with per-partition lineage checkpointing (resumable).
     spark-submit --py-files dist/whitebox_tools_spark.zip \
         scripts/submit_job.py --geodocs <path> --out <dir> [--buckets 16]
 
-On a cluster the SparkSession comes from spark-submit's conf; locally it
-falls back to the tuned local builder. Kill the job mid-run and re-submit:
-completed buckets are skipped via the lineage manifests.
+Under spark-submit the session's master and resources come from
+spark-submit's conf, with ANSI mode off as the engine assumes; run with
+plain `python` it is the tuned local builder (session.get_spark). Kill the
+job mid-run and re-submit: completed buckets are skipped via the lineage
+manifests.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 from pyspark.sql import SparkSession
@@ -25,8 +28,15 @@ def main():
     ap.add_argument("--buckets", type=int, default=16)
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("wts-submit").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if "PYSPARK_GATEWAY_PORT" in os.environ:  # launched by spark-submit
+        spark = (
+            SparkSession.builder.appName("wts-submit").config("spark.sql.ansi.enabled", "false").getOrCreate()
+        )
+        spark.sparkContext.setLogLevel("WARN")
+    else:
+        from whitebox_tools_spark.session import get_spark
+
+        spark = get_spark(app_name="wts-submit")
 
     import __spark_entry__ as E
     from whitebox_tools_spark import lineage

@@ -1,7 +1,7 @@
 """Span decode: geodoc table (doc_id, spans) -> typed geometry DataFrames.
 
 Decode paths:
-  - points: pure column expressions (explode + split + cast) — stays in
+  - points: SQL text over built-ins (explode + split + cast) — stays in
     whole-stage codegen, no Python at all.
   - polygons: Arrow-batched pandas UDF parsing ring strings into
     array<double> part rows (small side; runs once, result broadcastable).
@@ -25,17 +25,20 @@ from whitebox_tools_spark import geometry as G
 
 def decode_points(docs: DataFrame, *, include_z: bool = True) -> DataFrame:
     """point / point_z spans -> (doc_id, point_id, x, y, z). point_id is the
-    dense numeric suffix of doc_id (deterministic join key). Built-ins only."""
-    s = docs.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).filter(F.col("s.kind").isin(*(["point", "point_z"] if include_z else ["point"])))
-    parts = F.split(F.col("s.text"), " ")
-    return s.select(
-        "doc_id",
-        F.regexp_extract("doc_id", r"(\d+)", 1).cast("long").alias("point_id"),
-        parts.getItem(0).cast("double").alias("x"),
-        parts.getItem(1).cast("double").alias("y"),
-        F.when(F.size(parts) > 2, parts.getItem(2).cast("double")).alias("z"),
+    dense numeric suffix of doc_id (deterministic join key). Built-ins only,
+    each step one projection or filter over SQL text."""
+    kinds = "'point', 'point_z'" if include_z else "'point'"
+    parts = "split(s.text, ' ')"
+    return (
+        docs.selectExpr("doc_id", "explode(spans) AS s")
+        .where(f"s.kind IN ({kinds})")
+        .selectExpr(
+            "doc_id",
+            r"CAST(regexp_extract(doc_id, '(\\d+)', 1) AS BIGINT) AS point_id",
+            f"CAST({parts}[0] AS DOUBLE) AS x",
+            f"CAST({parts}[1] AS DOUBLE) AS y",
+            f"CASE WHEN size({parts}) > 2 THEN CAST({parts}[2] AS DOUBLE) END AS z",
+        )
     )
 
 

@@ -40,9 +40,7 @@ def extract_raster_values_at_points(
     )
     if broadcast_cells:
         c = F.broadcast(c)
-    p = points.withColumn("__col", grid.col_expr(F.col(x))).withColumn(
-        "__row", grid.row_expr(F.col(y))
-    )
+    p = points.withColumns({"__col": F.expr(grid.col_sql(f"`{x}`")), "__row": F.expr(grid.row_sql(f"`{y}`"))})
     return (
         p.join(c, ["__row", "__col"], "left")
         .withColumn(out_col, F.coalesce(F.col("__val"), F.lit(grid.nodata)))

@@ -2891,14 +2891,8 @@ def burn_streams_at_roads(
 
     def cells_of(lines):
         ras = vector_lines_to_raster(lines, grid).select("row", "col")
-        eps = lines.select(
-            grid.row_expr(F.col("ys")[0]).alias("row"),
-            grid.col_expr(F.col("xs")[0]).alias("col"),
-        ).unionByName(
-            lines.select(
-                grid.row_expr(F.element_at("ys", -1)).alias("row"),
-                grid.col_expr(F.element_at("xs", -1)).alias("col"),
-            )
+        eps = lines.selectExpr(f"{grid.row_sql('ys[0]')} AS row", f"{grid.col_sql('xs[0]')} AS col").unionByName(
+            lines.selectExpr(f"{grid.row_sql('element_at(ys, -1)')} AS row", f"{grid.col_sql('element_at(xs, -1)')} AS col")
         )
         return ras.unionByName(eps).distinct()
 

@@ -521,8 +521,8 @@ def resample(
         spark.range(dst_grid.rows).select(F.col("id").alias("row"))
         .crossJoin(spark.range(dst_grid.cols).select(F.col("id").alias("col")))
     )
-    x = dst_grid.x_center_expr(F.col("col"))
-    y = dst_grid.y_center_expr(F.col("row"))
+    x = F.expr(dst_grid.x_center_sql("col"))
+    y = F.expr(dst_grid.y_center_sql("row"))
     rs = (F.lit(src_grid.north) - y) / F.lit(src_grid.res_y)
     cs = (x - F.lit(src_grid.west)) / F.lit(src_grid.res_x)
     if method == "nn":
@@ -994,11 +994,7 @@ def mosaic_resample(rasters_with_grids, out_grid: GridSpec, *, method: str = "bi
         (F.col("id") / out_grid.cols).cast("long").alias("row"),
         (F.col("id") % out_grid.cols).alias("col"),
     )
-    cells = cells.select(
-        "row", "col",
-        out_grid.x_center_expr(F.col("col")).alias("x"),
-        out_grid.y_center_expr(F.col("row")).alias("y"),
-    )
+    cells = cells.selectExpr("row", "col", f"{out_grid.x_center_sql('col')} AS x", f"{out_grid.y_center_sql('row')} AS y")
     offs = F.array(*[
         F.struct(F.lit(sx).alias("sx"), F.lit(sy).alias("sy")) for sx, sy in stencil
     ])

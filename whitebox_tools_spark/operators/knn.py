@@ -51,10 +51,10 @@ equal values on ties — FIXTURES.md). A call runs the occupancy count and
 the candidate query, and leaves nothing persisted.
 
 Plans are built from SQL text: each step is one selectExpr/where over the
-CellIndex *_sql mirrors, so building a call's plan costs one py4j round
-trip per step rather than one per Column operator; building the plan in
-Python, not running it in Spark, is where a call spends most of its time.
-Only the reach table is computed in numpy.
+grid's *_sql text and its one clamp (grid.clamp_sql), so building a call's
+plan costs one py4j round trip per step rather than one per Column
+operator; building the plan in Python, not running it in Spark, is where a
+call spends most of its time. Only the reach table is computed in numpy.
 """
 
 from __future__ import annotations
@@ -66,24 +66,16 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.grid import CellIndex, GridSpec
+from whitebox_tools_spark.grid import CellIndex, GridSpec, clamp_sql, double_sql
 
 _OCC_ZOOM = 10  # occupancy is counted at this zoom or coarser: <= 4^10 cells
-
-
-def _dbl(v: float) -> str:
-    """A double literal as SQL text (a bare 0.5 would be a DECIMAL). The
-    *_sql mirrors write bare literals too, so coordinates are cast to DOUBLE
-    before they meet them."""
-    v = float(v)
-    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
 
 
 def _prep_points(points, index, point_id, px, py, z):
     """In-world points with their cell (__ix, __iy, __cell)."""
     hi = index.n - 1
-    ix = index.ix_sql(f"CAST(`{px}` AS DOUBLE)")
-    iy = index.iy_sql(f"CAST(`{py}` AS DOUBLE)")
+    ix = index.ix_sql(f"`{px}`")
+    iy = index.iy_sql(f"`{py}`")
     return points.selectExpr(
         f"`{point_id}` AS point_id",
         f"`{px}` AS px",
@@ -136,16 +128,9 @@ def _neighbours(
     -> (target_id, tx, ty, point_id, px, py, z, dist_sq, rank), rank by
     (dist_sq, point_id)."""
     hi = index.n - 1
-    # the clamp comes after the NULL filter: least/greatest would clamp a
-    # NULL index to an edge cell
-    t = targets.selectExpr(
-        "target_id",
-        "tx",
-        "ty",
-        f"{index.ix_sql('CAST(tx AS DOUBLE)')} AS __ix",
-        f"{index.iy_sql('CAST(ty AS DOUBLE)')} AS __iy",
-    ).where("__ix IS NOT NULL AND __iy IS NOT NULL")
-    cx, cy = f"least(greatest(__ix, 0), {hi})", f"least(greatest(__iy, 0), {hi})"
+    # a target with a NULL coordinate keeps NULL cells and probes nothing
+    t = targets.selectExpr("target_id", "tx", "ty", f"{index.ix_sql('tx')} AS __ix", f"{index.iy_sql('ty')} AS __iy")
+    cx, cy = clamp_sql("__ix", hi), clamp_sql("__iy", hi)
     cols = [
         "target_id",
         "tx",
@@ -158,16 +143,16 @@ def _neighbours(
     if k > 0:
         shift = max(0, index.zoom - _OCC_ZOOM)
         cols.append(f"shiftright({cx}, {shift}) * {index.n >> shift} + shiftright({cy}, {shift}) AS __occ")
-        reach = f"greatest({reach}, ceil((__reach + __d0) * {_dbl(math.sqrt(2.0))}))"
+        reach = f"greatest({reach}, ceil((__reach + __d0) * {double_sql(math.sqrt(2.0))}))"
     t = t.selectExpr(*cols)
     if k > 0:
         t = t.join(F.broadcast(_reach_table(p, index, k)), "__occ")
 
     def span(c: str) -> str:
-        return f"sequence(greatest({c} - __e, 0), least({c} + __e, {hi}))"
+        return f"sequence({clamp_sql(f'{c} - __e', hi)}, {clamp_sql(f'{c} + __e', hi)})"
 
     probes = (
-        t.selectExpr("target_id", "tx", "ty", "__cx", "__cy", f"least({reach}, {hi}) AS __e")
+        t.selectExpr("target_id", "tx", "ty", "__cx", "__cy", f"{clamp_sql(reach, hi)} AS __e")
         .selectExpr("target_id", "tx", "ty", "__cy", "__e", f"explode({span('__cx')}) AS __nx")
         .selectExpr("target_id", "tx", "ty", "__nx", f"explode({span('__cy')}) AS __ny")
         .selectExpr("target_id", "tx", "ty", f"{index.cell_id_sql('__nx', '__ny')} AS __cell")
@@ -185,7 +170,7 @@ def _neighbours(
     rank = "row_number() OVER (PARTITION BY target_id ORDER BY dist_sq, point_id) AS rank"
     if radius <= 0.0:
         return cand.selectExpr("*", rank).where(f"rank <= {k}")
-    in_r = f"sqrt(dist_sq) <= {_dbl(radius)}"
+    in_r = f"sqrt(dist_sq) <= {double_sql(radius)}"
     return (
         cand.selectExpr(
             "*", rank, f"count(CASE WHEN {in_r} THEN 1 END) OVER (PARTITION BY target_id) AS __n_in"
@@ -235,8 +220,8 @@ def _grid_targets(spark, grid: GridSpec) -> DataFrame:
     return spark.range(n, numPartitions=max(1, n // 262144)).selectExpr(
         f"{row} AS row",
         f"{col} AS col",
-        f"{_dbl(grid.west)} + (CAST({col} AS DOUBLE) + 0.5D) * {_dbl(grid.res_x)} AS x",
-        f"{_dbl(grid.north)} - (CAST({row} AS DOUBLE) + 0.5D) * {_dbl(grid.res_y)} AS y",
+        f"{double_sql(grid.west)} + (CAST({col} AS DOUBLE) + 0.5E0) * {double_sql(grid.res_x)} AS x",
+        f"{double_sql(grid.north)} - (CAST({row} AS DOUBLE) + 0.5E0) * {double_sql(grid.res_y)} AS y",
         "id AS target_id",
     )
 
@@ -279,9 +264,9 @@ def nearest_neighbour_gridding(
         _prep_points(points, index, point_id, px, py, z),
         index,
         1,
-    ).where(f"sqrt(dist_sq) <= {_dbl(max_dist)}")
+    ).where(f"sqrt(dist_sq) <= {double_sql(max_dist)}")
     return targets.join(nn.select("target_id", "z"), "target_id", "left").selectExpr(
-        "row", "col", f"coalesce(z, {_dbl(grid.nodata)}) AS value"
+        "row", "col", f"coalesce(z, {double_sql(grid.nodata)}) AS value"
     )
 
 
@@ -309,16 +294,16 @@ def idw_gridding(
         points, grid, index, radius=radius, min_points=min_points, point_id=point_id, px=px, py=py, z=z
     )
     # reference guards `if dist > 0` before accumulating (idw_interpolation.rs:630-638)
-    inv_w = f"power(sqrt(dist_sq), {_dbl(weight)})"
+    inv_w = f"power(sqrt(dist_sq), {double_sql(weight)})"
     idw = cand.groupBy("target_id").agg(
         F.expr("count(1) AS n_hits"),
-        F.expr("min(CASE WHEN dist_sq = 0.0D THEN z END) AS zero_z"),
-        F.expr(f"sum(CASE WHEN dist_sq > 0.0D THEN z / {inv_w} END) AS wz"),
-        F.expr(f"sum(CASE WHEN dist_sq > 0.0D THEN 1.0D / {inv_w} END) AS w"),
+        F.expr("min(CASE WHEN dist_sq = 0.0E0 THEN z END) AS zero_z"),
+        F.expr(f"sum(CASE WHEN dist_sq > 0.0E0 THEN z / {inv_w} END) AS wz"),
+        F.expr(f"sum(CASE WHEN dist_sq > 0.0E0 THEN 1.0E0 / {inv_w} END) AS w"),
     )
     out = idw.where(f"n_hits >= {max(min_points, 1)}").selectExpr(
         "target_id", "CASE WHEN zero_z IS NOT NULL THEN zero_z ELSE wz / w END AS value"
     )
     return targets.join(out, "target_id", "left").selectExpr(
-        "row", "col", f"coalesce(value, {_dbl(grid.nodata)}) AS value"
+        "row", "col", f"coalesce(value, {double_sql(grid.nodata)}) AS value"
     )

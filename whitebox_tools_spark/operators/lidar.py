@@ -44,9 +44,8 @@ def filter_classes(points: DataFrame, keep: list[int]) -> DataFrame:
 def point_stats(points: DataFrame, grid: GridSpec) -> DataFrame:
     """Per-cell point count / min / max / mean z (LidarPointStats)."""
     return (
-        points.withColumn("col", grid.col_expr(F.col("x")))
-        .withColumn("row", grid.row_expr(F.col("y")))
-        .filter(grid.in_grid_expr(F.col("row"), F.col("col")))
+        points.withColumns({"col": F.expr(grid.col_sql("x")), "row": F.expr(grid.row_sql("y"))})
+        .filter(grid.in_grid_sql("row", "col"))
         .groupBy("row", "col")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
@@ -63,8 +62,7 @@ def lidar_thin(points: DataFrame, grid: GridSpec, *, method: str = "lowest") -> 
     order = [F.col("z").asc() if asc else F.col("z").desc(), F.col("point_id")]
     w = Window.partitionBy("row", "col").orderBy(*order)
     return (
-        points.withColumn("col", grid.col_expr(F.col("x")))
-        .withColumn("row", grid.row_expr(F.col("y")))
+        points.withColumns({"col": F.expr(grid.col_sql("x")), "row": F.expr(grid.row_sql("y"))})
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
@@ -88,10 +86,7 @@ def normalize_height(
     surface = idw_gridding(
         ground, grid, index, weight=2.0, radius=0.0, min_points=min_points
     ).withColumnRenamed("value", "ground_z")
-    p = (
-        points.withColumn("col", grid.col_expr(F.col("x")))
-        .withColumn("row", grid.row_expr(F.col("y")))
-    )
+    p = points.withColumns({"col": F.expr(grid.col_sql("x")), "row": F.expr(grid.row_sql("y"))})
     return (
         p.join(surface, ["row", "col"], "left")
         .withColumn(
@@ -261,11 +256,7 @@ def lidar_point_density(
     cells = (
         spark.range(grid.rows).select(F.col("id").alias("row"))
         .crossJoin(spark.range(grid.cols).select(F.col("id").alias("col")))
-        .select(
-            "row", "col",
-            grid.x_center_expr(F.col("col")).alias("cx"),
-            grid.y_center_expr(F.col("row")).alias("cy"),
-        )
+        .selectExpr("row", "col", f"{grid.x_center_sql('col')} AS cx", f"{grid.y_center_sql('row')} AS cy")
         .select(
             "row", "col", "cx", "cy",
             F.floor(F.col("cx") / radius).cast("long").alias("bx"),
@@ -426,12 +417,8 @@ def flightline_overlap(points: DataFrame, grid, *, source: str = "point_source_i
     cell, the number of DISTINCT flightlines (point source ids) with
     points in the cell. -> (row, col, value)."""
     return (
-        points.select(
-            grid.row_expr(F.col("y")).alias("row"),
-            grid.col_expr(F.col("x")).alias("col"),
-            F.col(source),
-        )
-        .filter(grid.in_grid_expr(F.col("row"), F.col("col")))
+        points.selectExpr(f"{grid.row_sql('y')} AS row", f"{grid.col_sql('x')} AS col", f"`{source}`")
+        .filter(grid.in_grid_sql("row", "col"))
         .groupBy("row", "col")
         .agg(F.countDistinct(source).cast("double").alias("value"))
     )
@@ -444,9 +431,7 @@ def classify_overlap_points(points: DataFrame, grid, *, source: str = "point_sou
     cells = flightline_overlap(points, grid, source=source).filter(
         F.col("value") > 1.0
     ).select("row", "col")
-    keyed = points.withColumn("row", grid.row_expr(F.col("y"))).withColumn(
-        "col", grid.col_expr(F.col("x"))
-    )
+    keyed = points.withColumns({"row": F.expr(grid.row_sql("y")), "col": F.expr(grid.col_sql("x"))})
     return (
         keyed.join(cells.withColumn("__o", F.lit(1)), ["row", "col"], "left")
         .withColumn(
@@ -463,9 +448,7 @@ def lidar_colourize(points: DataFrame, composite: DataFrame, grid) -> DataFrame:
     """LidarColourize (lidar_analysis/lidar_colourize.rs): attach the
     packed-composite RGB at each point's raster cell. Points off the image
     are dropped (the reference requires coverage)."""
-    keyed = points.withColumn("row", grid.row_expr(F.col("y"))).withColumn(
-        "col", grid.col_expr(F.col("x"))
-    )
+    keyed = points.withColumns({"row": F.expr(grid.row_sql("y")), "col": F.expr(grid.col_sql("x"))})
     v = F.col("value").cast("long")
     rgb = composite.select(
         "row", "col",

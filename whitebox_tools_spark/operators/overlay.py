@@ -21,8 +21,9 @@ Re-answers the reference's line/polygon overlay family:
     raster_vector ring stitcher over the same kept pieces.
 
 Spark plan (big A side x broadcastable B side — the PIP shape):
-  1. per-feature bbox -> quadtree cell cover as PURE COLUMN EXPRESSIONS
-     (sequence x sequence of cell ids, exploded) — sargable candidates;
+  1. per-feature bbox -> quadtree cell cover as one SQL expression over
+     the CellIndex text and its clamp (sequence x sequence of cell ids,
+     exploded) — sargable candidates;
   2. equi-join against the broadcast cover of the B side + bbox-overlap
      filter -> candidate B ids aggregated per A feature (one shuffle);
   3. one Arrow-batched mapInPandas pass runs the numpy split/PIP kernel per
@@ -41,61 +42,53 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark import geometry as G
-from whitebox_tools_spark.grid import CellIndex
+from whitebox_tools_spark.grid import CellIndex, clamp_sql, double_sql
 from whitebox_tools_spark.operators.pip import polygon_cover
 
 
 # ---------------------------------------------------------------------------
 # candidate generation
 # ---------------------------------------------------------------------------
-def bbox_cover_cells_expr(index: CellIndex, xmin, ymin, xmax, ymax):
-    """Array of cell ids covering a bbox, as a pure column expression
-    (the expression twin of CellIndex.cover_bbox)."""
-    n = index.n
-    clamp = lambda c: F.greatest(F.lit(0).cast("long"), F.least(F.lit(n - 1).cast("long"), c))  # noqa: E731
-    ix0, ix1 = clamp(index.ix_expr(xmin)), clamp(index.ix_expr(xmax))
-    iy0, iy1 = clamp(index.iy_expr(ymin)), clamp(index.iy_expr(ymax))
-    return F.flatten(
-        F.transform(
-            F.sequence(ix0, ix1),
-            lambda ix: F.transform(F.sequence(iy0, iy1), lambda iy: index.cell_id_expr(ix, iy)),
-        )
-    )
+def _cells_sql(index: CellIndex, ix0: str, ix1: str, iy0: str, iy1: str) -> str:
+    """Array of the ids of cells (__ix, __iy), __ix in [ix0, ix1] and __iy in
+    [iy0, iy1]; the iy bounds may depend on __ix."""
+    cell = index.cell_id_sql("__ix", "__iy")
+    return f"flatten(transform(sequence({ix0}, {ix1}), __ix -> transform(sequence({iy0}, {iy1}), __iy -> {cell})))"
 
 
-def segment_cover_cells_expr(index: CellIndex, x0, y0, x1, y1):
+def bbox_cover_cells_sql(index: CellIndex, xmin: str, ymin: str, xmax: str, ymax: str) -> str:
+    """Array of cell ids covering a bbox, as SQL text over the bbox
+    expressions (the SQL twin of CellIndex.cover_bbox)."""
+    hi = index.n - 1
+    ix0, ix1 = (clamp_sql(index.ix_sql(v), hi) for v in (xmin, xmax))
+    iy0, iy1 = (clamp_sql(index.iy_sql(v), hi) for v in (ymin, ymax))
+    return _cells_sql(index, ix0, ix1, iy0, iy1)
+
+
+def segment_cover_cells_sql(index: CellIndex, x0: str, y0: str, x1: str, y1: str) -> str:
     """Array of cell ids covering a SEGMENT's traversed cells (padded one
-    cell on every side for float drift), as a pure column expression.
-    Linear in segment length — a long diagonal covers O(len/cell) cells
-    where its bbox cover is O((len/cell)^2), the ADVICE r04 heavy-tail
-    blowup. Any point ON the segment is guaranteed inside the cover, so
-    pairing on shared cells finds every true intersection."""
-    cs, ox, oy, n = index.cell_size, index.origin_x, index.origin_y, index.n
-    clamp = lambda c: F.greatest(  # noqa: E731
-        F.lit(0).cast("long"), F.least(F.lit(n - 1).cast("long"), c)
-    )
-    ix0 = clamp(index.ix_expr(F.least(x0, x1)) - 1)
-    ix1 = clamp(index.ix_expr(F.greatest(x0, x1)) + 1)
-    dx = x1 - x0
-    dy = y1 - y0
+    cell on every side for float drift), as SQL text over the endpoint
+    expressions. Linear in segment length — a long diagonal covers
+    O(len/cell) cells where its bbox cover is O((len/cell)^2), the ADVICE
+    r04 heavy-tail blowup. Any point ON the segment is guaranteed inside the
+    cover, so pairing on shared cells finds every true intersection."""
+    hi = index.n - 1
+    cs = double_sql(index.cell_size)
+    ix0 = clamp_sql(f"{index.ix_sql(f'least({x0}, {x1})')} - 1", hi)
+    ix1 = clamp_sql(f"{index.ix_sql(f'greatest({x0}, {x1})')} + 1", hi)
+    dx, dy = f"({x1} - {x0})", f"({y1} - {y0})"
 
-    def yr_at(xq):
+    def y_at(xq: str) -> str:
         # y of the segment at clamped parameter t(xq)
-        t = F.greatest(F.lit(0.0), F.least(F.lit(1.0), (xq - x0) / dx))
-        return y0 + t * dy
+        return f"({y0} + greatest(0.0E0, least(1.0E0, ({xq} - {x0}) / {dx})) * {dy})"
 
-    def rows_of(ix):
-        xa = F.lit(ox) + ix.cast("double") * F.lit(cs)
-        xb = xa + F.lit(cs)
-        ya = F.when(dx == 0.0, F.least(y0, y1)).otherwise(yr_at(xa))
-        yb = F.when(dx == 0.0, F.greatest(y0, y1)).otherwise(yr_at(xb))
-        iy0 = clamp(index.iy_expr(F.least(ya, yb)) - 1)
-        iy1 = clamp(index.iy_expr(F.greatest(ya, yb)) + 1)
-        return F.transform(
-            F.sequence(iy0, iy1), lambda iy: index.cell_id_expr(ix, iy)
-        )
-
-    return F.flatten(F.transform(F.sequence(ix0, ix1), rows_of))
+    # the column of cells __ix spans [xa, xb)
+    xa = f"({double_sql(index.origin_x)} + CAST(__ix AS DOUBLE) * {cs})"
+    ya = f"CASE WHEN {dx} = 0.0E0 THEN least({y0}, {y1}) ELSE {y_at(xa)} END"
+    yb = f"CASE WHEN {dx} = 0.0E0 THEN greatest({y0}, {y1}) ELSE {y_at(f'({xa} + {cs})')} END"
+    iy0 = clamp_sql(f"{index.iy_sql(f'least({ya}, {yb})')} - 1", hi)
+    iy1 = clamp_sql(f"{index.iy_sql(f'greatest({ya}, {yb})')} + 1", hi)
+    return _cells_sql(index, ix0, ix1, iy0, iy1)
 
 
 def _candidates_per_feature(
@@ -121,15 +114,9 @@ def _candidates_per_feature(
         F.min("bymin").alias("bymin"),
         F.max("bymax").alias("bymax"),
     )
+    cover_cells = bbox_cover_cells_sql(index, "bxmin", "bymin", "bxmax", "bymax")
     cand = (
-        with_bbox.withColumn(
-            "cell_id",
-            F.explode(
-                bbox_cover_cells_expr(
-                    index, F.col("bxmin"), F.col("bymin"), F.col("bxmax"), F.col("bymax")
-                )
-            ),
-        )
+        with_bbox.selectExpr("*", f"explode({cover_cells}) AS cell_id")
         .join(cover, "cell_id")
         .filter(
             (F.col("bxmin") <= F.col("pxmax"))

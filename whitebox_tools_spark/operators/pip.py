@@ -15,10 +15,11 @@ Spark plan (designed for 10^12 points x broadcastable polygon set):
      The rows are one Arrow table, so the cover is a local relation
      (LocalTableScan with exact size stats): no job unpickles Python rows
      before the join can start.
-  2. points get cell_id as a pure column expression (whole-stage codegen),
-     with ix/iy clamped into [0, n-1] as the cover is: a point outside the
-     world lands in the border cell next to it, so a polygon that reaches
-     past the world edge still meets it; steps 4-5 keep the result exact.
+  2. points get cell_id from CellIndex.cell_of_xy_sql, the SQL text every
+     cell assignment uses (whole-stage codegen), with ix/iy clamped into
+     [0, n-1] as the cover is: a point outside the world lands in the
+     border cell next to it, so a polygon that reaches past the world edge
+     still meets it; steps 4-5 keep the result exact.
   3. broadcast hash join points.cell_id == cover.cell_id — no shuffle of the
      big side, ever.
   4. bbox filter as a column expression (cheap rejection).
@@ -137,14 +138,13 @@ def points_in_polygons(
         *[F.col(c) for c in carry],
     )
     # expressions as SQL text: one py4j call each instead of one per
-    # Column operator (hundreds per query), with the same analyzed plan
-    # ix/iy clamped into the world, as cover_bbox clamps the cover (a NULL
-    # coordinate clamps to a cell too, and then fails the bbox filter)
-    hi = index.n - 1
-    ix = f"LEAST(GREATEST({index.ix_sql('x')}, 0), {hi})"
-    iy = f"LEAST(GREATEST({index.iy_sql('y')}, 0), {hi})"
-    cell_id = index.cell_id_sql(ix, iy)
-    cand = pts.select("*", F.expr(cell_id).alias("cell_id")).join(cover, "cell_id")
+    # Column operator (hundreds per query). ix/iy are clamped into the world,
+    # as cover_bbox clamps the cover. A NULL coordinate gets cell -1, which no
+    # cover row has: with a nullable key, Catalyst would add an IS NOT NULL
+    # filter on it below the projection and parse each point's coordinates
+    # again to evaluate it.
+    cell_id = f"coalesce({index.cell_of_xy_sql('x', 'y')}, -1) AS cell_id"
+    cand = pts.selectExpr("*", cell_id).join(cover, "cell_id")
     in_bbox = "x >= xmin AND x <= xmax AND y >= ymin AND y <= ymax"
     return cand.filter(f"{in_bbox} AND {_KEEP}").select("point_id", "poly_id", *carry)
 

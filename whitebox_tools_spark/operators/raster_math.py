@@ -812,8 +812,7 @@ def class_centroid(cells: DataFrame, grid) -> DataFrame:
 
     src = cells.filter(F.col("value").isNotNull())
     return src.groupBy("value").agg(
-        F.avg(grid.x_center_expr(F.col("col"))).alias("cx"),
-        F.avg(grid.y_center_expr(F.col("row"))).alias("cy"),
+        F.expr(f"avg({grid.x_center_sql('col')}) AS cx"), F.expr(f"avg({grid.y_center_sql('row')}) AS cy")
     )
 
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.grid import CellIndex, GridSpec
+from whitebox_tools_spark.grid import CellIndex, GridSpec, clamp_sql
 from whitebox_tools_spark.distributed import loop_checkpoint
 from whitebox_tools_spark.operators.pip import points_in_polygons
 
@@ -50,8 +50,7 @@ def polygons_to_raster(
             (F.col("id") % grid.cols).alias("col"),
             F.col("id").alias("point_id"),
         )
-        .withColumn("x", grid.x_center_expr(F.col("col")))
-        .withColumn("y", grid.y_center_expr(F.col("row")))
+        .selectExpr("*", f"{grid.x_center_sql('col')} AS x", f"{grid.y_center_sql('row')} AS y")
     )
     hits = points_in_polygons(centers, polys_parts, index)
     win = hits.groupBy("point_id").agg(F.max("poly_id").alias("poly_id"))
@@ -94,49 +93,35 @@ def vector_lines_to_raster(
 
     rows_m1 = grid.rows - 1
     cols_m1 = grid.cols - 1
-    clamp_r = lambda c: F.greatest(F.lit(0).cast("long"), F.least(F.lit(rows_m1).cast("long"), c))  # noqa: E731
-    clamp_c = lambda c: F.greatest(F.lit(0).cast("long"), F.least(F.lit(cols_m1).cast("long"), c))  # noqa: E731
 
     # row-line crossings
-    r_top = clamp_r(grid.row_expr(F.greatest("y0", "y1")))
-    r_bot = clamp_r(grid.row_expr(F.least("y0", "y1")))
-    rc = segs.withColumn("row", F.explode(F.sequence(r_top, r_bot)))
-    y_r = grid.y_center_expr(F.col("row"))
-    between_y = (y_r >= F.least("y0", "y1")) & (y_r <= F.greatest("y0", "y1"))
-    x_prime = F.col("x0") + (y_r - F.col("y0")) / (F.col("y1") - F.col("y0")) * (
-        F.col("x1") - F.col("x0")
-    )
-    rc = rc.filter(between_y & (F.col("y1") != F.col("y0"))).select(
-        "lid", "v", "row", grid.col_expr(x_prime).alias("col")
+    r_top = clamp_sql(grid.row_sql("greatest(y0, y1)"), rows_m1)
+    r_bot = clamp_sql(grid.row_sql("least(y0, y1)"), rows_m1)
+    rc = segs.selectExpr("*", f"explode(sequence({r_top}, {r_bot})) AS row")
+    y_r = grid.y_center_sql("row")
+    x_prime = f"x0 + ({y_r} - y0) / (y1 - y0) * (x1 - x0)"
+    rc = rc.where(f"{y_r} >= least(y0, y1) AND {y_r} <= greatest(y0, y1) AND y1 != y0").selectExpr(
+        "lid", "v", "row", f"{grid.col_sql(x_prime)} AS col"
     )
 
     # column-line crossings
-    c_left = clamp_c(grid.col_expr(F.least("x0", "x1")))
-    c_right = clamp_c(grid.col_expr(F.greatest("x0", "x1")))
-    cc = segs.withColumn("col", F.explode(F.sequence(c_left, c_right)))
-    x_c = grid.x_center_expr(F.col("col"))
-    between_x = (x_c >= F.least("x0", "x1")) & (x_c <= F.greatest("x0", "x1"))
-    y_prime = F.col("y0") + (x_c - F.col("x0")) / (F.col("x1") - F.col("x0")) * (
-        F.col("y1") - F.col("y0")
-    )
-    cc = cc.filter(between_x & (F.col("x1") != F.col("x0"))).select(
-        "lid", "v", grid.row_expr(y_prime).alias("row"), "col"
+    c_left = clamp_sql(grid.col_sql("least(x0, x1)"), cols_m1)
+    c_right = clamp_sql(grid.col_sql("greatest(x0, x1)"), cols_m1)
+    cc = segs.selectExpr("*", f"explode(sequence({c_left}, {c_right})) AS col")
+    x_c = grid.x_center_sql("col")
+    y_prime = f"y0 + ({x_c} - x0) / (x1 - x0) * (y1 - y0)"
+    cc = cc.where(f"{x_c} >= least(x0, x1) AND {x_c} <= greatest(x0, x1) AND x1 != x0").selectExpr(
+        "lid", "v", f"{grid.row_sql(y_prime)} AS row", "col"
     )
 
-    marks = rc.unionByName(cc).filter(
-        (F.col("row") >= 0) & (F.col("row") <= rows_m1)
-        & (F.col("col") >= 0) & (F.col("col") <= cols_m1)
-    )
+    marks = rc.unionByName(cc).where(f"row >= 0 AND row <= {rows_m1} AND col >= 0 AND col <= {cols_m1}")
     return marks.groupBy("row", "col").agg(F.max_by("v", "lid").alias("value"))
 
 
 def raster_to_vector_points(cells: DataFrame, grid: GridSpec) -> DataFrame:
     """Non-nodata cells -> point features at cell centers."""
-    return cells.filter(F.col("value").isNotNull()).select(
-        (F.col("row") * grid.cols + F.col("col")).alias("fid"),
-        grid.x_center_expr(F.col("col")).alias("x"),
-        grid.y_center_expr(F.col("row")).alias("y"),
-        F.col("value"),
+    return cells.filter(F.col("value").isNotNull()).selectExpr(
+        f"row * {grid.cols} + col AS fid", f"{grid.x_center_sql('col')} AS x", f"{grid.y_center_sql('row')} AS y", "value"
     )
 
 
@@ -398,15 +383,9 @@ def points_to_raster(
     rest with a background constant). -> (row, col, value)."""
     from pyspark.sql import functions as F
 
-    src = points.filter(F.col(field).isNotNull()).select(
-        grid.row_expr(F.col("y")).alias("row"),
-        grid.col_expr(F.col("x")).alias("col"),
-        F.col(field).alias("v"),
-        F.col(id_col).alias("pid"),
-    ).filter(
-        (F.col("row") >= 0) & (F.col("row") < grid.rows)
-        & (F.col("col") >= 0) & (F.col("col") < grid.cols)
-    )
+    src = points.filter(F.col(field).isNotNull()).selectExpr(
+        f"{grid.row_sql('y')} AS row", f"{grid.col_sql('x')} AS col", f"`{field}` AS v", f"`{id_col}` AS pid"
+    ).filter(grid.in_grid_sql("row", "col"))
     g = src.groupBy("row", "col")
     if assign == "first":
         out = g.agg(F.min(F.struct("pid", "v")).getField("v").alias("value"))

@@ -178,8 +178,8 @@ def trend_surface(
 
     import numpy as np
 
-    xs = grid.x_center_expr(F.col("col")) if x is None else F.col(x)
-    ys = grid.y_center_expr(F.col("row")) if y is None else F.col(y)
+    xs = F.expr(grid.x_center_sql("col")) if x is None else F.col(x)
+    ys = F.expr(grid.y_center_sql("row")) if y is None else F.col(y)
     src = (
         cells.filter(F.col("value").isNotNull())
         .withColumn("__x", xs)

@@ -1906,17 +1906,11 @@ def elevation_above_stream_euclidean(
 
     sc, _ = _stream_set(cells, grid, threshold)
     dem = cells.filter(F.col("value").isNotNull()).select("row", "col", "value")
-    srcs = sc.join(dem, ["row", "col"]).select(
-        (F.col("row") * grid.cols + F.col("col")).alias("point_id"),
-        grid.x_center_expr(F.col("col")).alias("px"),
-        grid.y_center_expr(F.col("row")).alias("py"),
-        F.col("value").alias("z"),
+    x, y = grid.x_center_sql("col"), grid.y_center_sql("row")
+    srcs = sc.join(dem, ["row", "col"]).selectExpr(
+        f"row * {grid.cols} + col AS point_id", f"{x} AS px", f"{y} AS py", "value AS z"
     )
-    targets = dem.select(
-        (F.col("row") * grid.cols + F.col("col")).alias("target_id"),
-        grid.x_center_expr(F.col("col")).alias("x"),
-        grid.y_center_expr(F.col("row")).alias("y"),
-    )
+    targets = dem.selectExpr(f"row * {grid.cols} + col AS target_id", f"{x} AS x", f"{y} AS y")
     nn = knn_join(targets, srcs, 1, index, px="px", py="py")
     return (
         dem.withColumn(

@@ -1236,10 +1236,12 @@ def profile(lines: DataFrame, dem: DataFrame, grid: GridSpec) -> DataFrame:
         F.element_at(F.col("ys"), F.col("i") + 2).alias("y1"),
     )
     seg = (
-        seg.withColumn("st_col", grid.col_expr(F.col("x0")))
-        .withColumn("st_row", grid.row_expr(F.col("y0")))
-        .withColumn("end_col", grid.col_expr(F.col("x1")))
-        .withColumn("end_row", grid.row_expr(F.col("y1")))
+        seg.withColumns({
+            "st_col": F.expr(grid.col_sql("x0")),
+            "st_row": F.expr(grid.row_sql("y0")),
+            "end_col": F.expr(grid.col_sql("x1")),
+            "end_row": F.expr(grid.row_sql("y1")),
+        })
         .withColumn("dxc", (F.col("end_col") - F.col("st_col")).cast("double"))
         .withColumn("dyc", (F.col("end_row") - F.col("st_row")).cast("double"))
         .withColumn("path", F.sqrt(F.col("dxc") ** 2 + F.col("dyc") ** 2))
@@ -2358,14 +2360,8 @@ def embankment_mapping(
     max_width = max_width / 2.0
 
     ras = vector_lines_to_raster(roads, grid).select("row", "col")
-    eps = roads.select(
-        grid.row_expr(F.col("ys")[0]).alias("row"),
-        grid.col_expr(F.col("xs")[0]).alias("col"),
-    ).unionByName(
-        roads.select(
-            grid.row_expr(F.element_at("ys", -1)).alias("row"),
-            grid.col_expr(F.element_at("xs", -1)).alias("col"),
-        )
+    eps = roads.selectExpr(f"{grid.row_sql('ys[0]')} AS row", f"{grid.col_sql('xs[0]')} AS col").unionByName(
+        roads.selectExpr(f"{grid.row_sql('element_at(ys, -1)')} AS row", f"{grid.col_sql('element_at(xs, -1)')} AS col")
     )
     rc = ras.unionByName(eps).distinct().localCheckpoint(eager=True)
 
@@ -2562,20 +2558,12 @@ def remove_embankments_dem(
     donors = (
         nb.join(emb_cells, ["row", "col"], "left_anti")
         .join(dem.select("row", "col", "value"), ["row", "col"])
-        .select(
-            grid.x_center_expr(F.col("col")).alias("dx"),
-            grid.y_center_expr(F.col("row")).alias("dy"),
-            F.col("value").alias("z"),
-        )
+        .selectExpr(f"{grid.x_center_sql('col')} AS dx", f"{grid.y_center_sql('row')} AS dy", "value AS z")
         .withColumn("bx", F.floor(F.col("dx") / F.lit(r)))
         .withColumn("by", F.floor(F.col("dy") / F.lit(r)))
     )
 
-    tgt = emb_cells.select(
-        "row", "col",
-        grid.x_center_expr(F.col("col")).alias("tx"),
-        grid.y_center_expr(F.col("row")).alias("ty"),
-    )
+    tgt = emb_cells.selectExpr("row", "col", f"{grid.x_center_sql('col')} AS tx", f"{grid.y_center_sql('row')} AS ty")
     bneigh = F.array(*[
         F.struct(
             (F.floor(F.col("tx") / F.lit(r)) + F.lit(ddx)).alias("bx"),

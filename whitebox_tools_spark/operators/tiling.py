@@ -1,7 +1,8 @@
 """Deterministic tiling / gridding (class TILE).
 
-Cell/tile assignment is always a pure column expression (whole-stage
-codegen), followed by groupBy(tile) aggregation or a partitioned write —
+Cell/tile assignment is always one projection over the grid module's SQL
+text (whole-stage codegen), followed by groupBy(tile) aggregation or a
+partitioned write —
 this is the reference's LidarTile / BlockMaximumGridding / AggregateRaster
 re-expressed as one-shuffle DataFrame plans.
 
@@ -38,12 +39,10 @@ def assign_tiles(
 ) -> DataFrame:
     """Append (tile_col, tile_row, tile) per lidar_tile.rs:322-325, as one
     projection over the grid.lidar_tile_sql text (the DuckDB oracles use
-    the same text). The coordinates are cast to DOUBLE so that the text's
-    bare literals (DECIMAL in Spark SQL) take double arithmetic whatever
-    the input column type."""
+    the same text)."""
     tcol, trow, tile = lidar_tile_sql(
-        f"CAST(`{x}` AS DOUBLE)",
-        f"CAST(`{y}` AS DOUBLE)",
+        f"`{x}`",
+        f"`{y}`",
         width=width,
         height=height,
         origin_x=origin_x,
@@ -80,9 +79,8 @@ def block_gridding(
     only when a dense raster is required)."""
     fn = {"max": F.max, "min": F.min, "mean": F.avg, "sum": F.sum, "count": F.count}[agg]
     return (
-        points.withColumn("col", grid.col_expr(F.col(x)))
-        .withColumn("row", grid.row_expr(F.col(y)))
-        .filter(grid.in_grid_expr(F.col("row"), F.col("col")))
+        points.withColumns({"col": F.expr(grid.col_sql(f"`{x}`")), "row": F.expr(grid.row_sql(f"`{y}`"))})
+        .filter(grid.in_grid_sql("row", "col"))
         .groupBy("row", "col")
         .agg(fn(F.col(value)).alias("value"))
     )

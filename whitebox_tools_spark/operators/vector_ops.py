@@ -435,7 +435,7 @@ def line_intersections(a_edges: DataFrame, b_edges: DataFrame) -> DataFrame:
     Spark plan: grid-cell candidate EQUI-join (no cartesian). A shared
     CellIndex is sized from one tiny driver-side stats row at the 99th
     percentile of segment bbox extent; each segment covers its TRAVERSED
-    cells (padded 1 cell, overlay.segment_cover_cells_expr) — linear in
+    cells (padded 1 cell, overlay.segment_cover_cells_sql) — linear in
     segment length even for the rare globally-long diagonal whose BBOX
     cover would be quadratic (the round-4 ADVICE heavy-tail blowup).
     Every true intersection point lies on both segments, so its cell is
@@ -443,7 +443,7 @@ def line_intersections(a_edges: DataFrame, b_edges: DataFrame) -> DataFrame:
     containing the intersection point, so the pair emits exactly once.
     -> distinct (parent1, parent2, x, y) with 6dp coordinates."""
     from whitebox_tools_spark.grid import CellIndex
-    from whitebox_tools_spark.operators.overlay import segment_cover_cells_expr
+    from whitebox_tools_spark.operators.overlay import segment_cover_cells_sql
 
     a = a_edges.select(
         F.col("poly_id").alias("parent1"),
@@ -487,18 +487,8 @@ def line_intersections(a_edges: DataFrame, b_edges: DataFrame) -> DataFrame:
     index = CellIndex(origin_x=float(st.xmin), origin_y=float(st.ymin),
                       extent=float(extent), zoom=zoom)
 
-    ac = a.withColumn(
-        "cell_id",
-        F.explode(segment_cover_cells_expr(
-            index, F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")
-        )),
-    )
-    bc = b.withColumn(
-        "cell_id",
-        F.explode(segment_cover_cells_expr(
-            index, F.col("bx0"), F.col("by0"), F.col("bx1"), F.col("by1")
-        )),
-    )
+    ac = a.selectExpr("*", f"explode({segment_cover_cells_sql(index, 'ax0', 'ay0', 'ax1', 'ay1')}) AS cell_id")
+    bc = b.selectExpr("*", f"explode({segment_cover_cells_sql(index, 'bx0', 'by0', 'bx1', 'by1')}) AS cell_id")
     bbox = (
         (F.least("ax0", "ax1") <= F.greatest("bx0", "bx1"))
         & (F.greatest("ax0", "ax1") >= F.least("bx0", "bx1"))

@@ -1253,9 +1253,8 @@ def q_lidar_block_minimum(spark, sf_dir):
     cloud = _order_cloud(spark, sf_dir)
     g = EXTRACT_GRID
     return (
-        cloud.withColumn("col", g.col_expr(F.col("x")))
-        .withColumn("row", g.row_expr(F.col("y")))
-        .filter(g.in_grid_expr(F.col("row"), F.col("col")))
+        cloud.withColumns({"col": F.expr(g.col_sql("x")), "row": F.expr(g.row_sql("y"))})
+        .filter(g.in_grid_sql("row", "col"))
         .groupBy("row", "col")
         .agg(F.round(F.min("z"), 6).alias("value"))
     )
@@ -1266,9 +1265,8 @@ def q_lidar_block_maximum(spark, sf_dir):
     cloud = _order_cloud(spark, sf_dir)
     g = EXTRACT_GRID
     return (
-        cloud.withColumn("col", g.col_expr(F.col("x")))
-        .withColumn("row", g.row_expr(F.col("y")))
-        .filter(g.in_grid_expr(F.col("row"), F.col("col")))
+        cloud.withColumns({"col": F.expr(g.col_sql("x")), "row": F.expr(g.row_sql("y"))})
+        .filter(g.in_grid_sql("row", "col"))
         .groupBy("row", "col")
         .agg(F.round(F.max("z"), 6).alias("value"))
     )

@@ -990,8 +990,8 @@ def q_create_plane(spark, sf_dir):
         spark.range(g.rows).select(F.col("id").alias("row"))
         .crossJoin(spark.range(g.cols).select(F.col("id").alias("col")))
     )
-    x = g.x_center_expr(F.col("col"))
-    y = g.y_center_expr(F.col("row"))
+    x = F.expr(g.x_center_sql("col"))
+    y = F.expr(g.y_center_sql("row"))
     return _r6(
         dense.select(
             "row", "col", (F.lit(100.0) + 0.05 * x - 0.02 * y).alias("value")
@@ -1005,7 +1005,7 @@ def q_raster_cell_assignment(spark, sf_dir):
     assign each cell its x-coordinate."""
     r = _part_raster(spark, sf_dir)
     return _r6(
-        r.select("row", "col", EXTRACT_GRID.x_center_expr(F.col("col")).alias("value")),
+        r.selectExpr("row", "col", f"{EXTRACT_GRID.x_center_sql('col')} AS value"),
         ["value"],
     )
 
